@@ -1888,64 +1888,21 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 # Registry ORDER is load-bearing: the driver's correctness gate verifies the
 # FIRST 50 entries only (observed: CORRECTNESS_r05.json == keys[:50]), so the
-# window rotates each round to cover queries the gate has never seen
-# (VERDICT r5 #1). Round-7 window = 3 §2 sentinels + the r6 window minus 9
-# already-r6-verified entries, replaced by the LAST 9 never-driver-verified
-# queries (VERDICT r6 #1) — after this round every registry entry has been
-# driver-verified at least once (tests/test_oracles.py pins the invariant
-# against the committed CORRECTNESS_r*.json artifacts).
+# window rotates each round to cover queries the gate has not seen recently.
+# tests/test_oracles.py pins the invariant: every entry is in the window or
+# in one of the two most recent distinct CORRECTNESS_r*.json artifacts
+# (r06 and r07 are identical, so those two are r05 and r07).
 _RAW_QUERIES: dict = {
         # ---- §2 sentinels (keep one per family in every window) ----
         "extract_per_turn": q_extract_per_turn,
         "conversation_documents": q_conversation_documents,
         "events_stream_window": q_events_stream_window,
-        # ---- never-driver-verified before r6: packing + substring dedup ----
-        "corpus_pack_shards": q_corpus_pack_shards,
-        "dedup_substring_spans": q_dedup_substring_spans,
-        "dedup_substring_apply": q_dedup_substring_apply,
-        "winnow_fingerprints": q_winnow_fingerprints,
-        "dedup_stream_ingest": q_dedup_stream_ingest,
-        # ---- curation family ----
-        "corpus_decontaminate": q_corpus_decontaminate,
-        "corpus_curate": q_corpus_curate,
-        "corpus_curate_funnel": q_corpus_curate_funnel,
-        # ---- joins / streaming / events ----
-        "events_interval_join": q_events_interval_join,
-        "events_stream_join": q_events_stream_join,
-        "events_stream_enrich": q_events_stream_enrich,
-        "events_funnel": q_events_funnel,
-        # ---- multimodal ----
-        "multimodal_ppm_decode": q_multimodal_ppm_decode,
-        "multimodal_wav_decode": q_multimodal_wav_decode,
-        # ---- text scoring / selection ----
-        "doc_tfidf_top_terms": q_doc_tfidf_top_terms,
-        "doc_unigram_nll": q_doc_unigram_nll,
-        "sft_pairs_budget_tokens": q_sft_pairs_budget_tokens,
-        "corpus_stratified_sample": q_corpus_stratified_sample,
-        "corpus_heavy_hitters": q_corpus_heavy_hitters,
-        # ---- similarity / ANN / SemDeDup / DSIR / classifier ----
-        "ann_cosine_topk": q_ann_cosine_topk,
-        "embedding_incremental_pairs": q_embedding_incremental_pairs,
-        "embedding_near_pairs": q_embedding_near_pairs,
-        "embedding_near_pairs_lsh": q_embedding_near_pairs_lsh,
-        "ann_lsh_topk_probe": q_ann_lsh_topk_probe,
-        "ann_ivf_assignments": q_ann_ivf_assignments,
-        "ann_ivf_trained_topk": q_ann_ivf_trained_topk,
-        "semdedup_losers": q_semdedup_losers,
-        "semdedup_wave_losers": q_semdedup_wave_losers,
-        "semdedup_retroactive_losers": q_semdedup_retroactive_losers,
-        "corpus_dsir_weights": q_corpus_dsir_weights,
-        "corpus_dsir_select": q_corpus_dsir_select,
-        "corpus_classifier_scores": q_corpus_classifier_scores,
-        "ann_index_probe": q_ann_index_probe,
-        # ---- r7 rotation: last-verified r1-r4, outside the 2-artifact
-        # guard horizon (tests/test_oracles.py) ----
+        # ---- last verified before r5 (or never) ----
         "pdf_payload_extract": q_pdf_payload_extract,
         "corpus_sample": q_corpus_sample,
         "doc_length_quantiles": q_doc_length_quantiles,
         "ann_lsh_buckets": q_ann_lsh_buckets,
         "ann_ivf_topk": q_ann_ivf_topk,
-        # ---- r7 rotation: the LAST 9 never-driver-verified queries ----
         "ann_index_probe_batch": q_ann_index_probe_batch,
         "doc_profile": q_doc_profile,
         "source_quality_report": q_source_quality_report,
@@ -1955,57 +1912,7 @@ _RAW_QUERIES: dict = {
         "ann_ivf_trained": q_ann_ivf_trained,
         "events_rolling_7d": q_events_rolling_7d,
         "winnow_similar_pairs": q_winnow_similar_pairs,
-        # ================= driver window boundary (50) =================
-        # displaced this round (driver-green in CORRECTNESS_r06.json)
-        "corpus_temperature_sample": q_corpus_temperature_sample,
-        "corpus_decontaminate_spans": q_corpus_decontaminate_spans,
-        "corpus_line_dedup": q_corpus_line_dedup,
-        "multimodal_gif_meta": q_multimodal_gif_meta,
-        "events_funnel_census": q_events_funnel_census,
-        "corpus_line_dedup_report": q_corpus_line_dedup_report,
-        "corpus_mixture_sample": q_corpus_mixture_sample,
-        "corpus_splits": q_corpus_splits,
-        "corpus_snapshot_diff": q_corpus_snapshot_diff,
-        "events_pivot_daily": q_events_pivot_daily,
-        "events_hll_daily": q_events_hll_daily,
-        "events_quantiles_approx": q_events_quantiles_approx,
-        "multimodal_features": q_multimodal_features,
-        "doc_pii_redact": q_doc_pii_redact,
-        # driver-green in earlier rounds
-        # r5-driver-green set (CORRECTNESS_r05.json)
-        "extract_kind_rollup": q_extract_kind_rollup,
-        "extract_passages": q_extract_passages,
-        "extract_numerics": q_extract_numerics,
-        "extract_tables": q_extract_tables,
-        "extract_spans": q_extract_spans,
-        "conversation_rollup": q_conversation_rollup,
-        "conversation_documents_salted": q_conversation_documents_salted,
-        "pipeline_lineage": q_pipeline_lineage,
-        "pricing_summary": q_pricing_summary,
-        "top_customers": q_top_customers,
-        "events_daily": q_events_daily,
-        "shipping_priority": q_shipping_priority,
-        "regional_volume": q_regional_volume,
-        "top_suppliers_per_nation": q_top_suppliers_per_nation,
-        "customers_without_orders": q_customers_without_orders,
-        "events_grouping_sets": q_events_grouping_sets,
-        "asof_latest_click": q_asof_latest_click,
-        "events_salted_daily": q_events_salted_daily,
-        "events_retention": q_events_retention,
-        "events_sessionize": q_events_sessionize,
-        "events_props_json": q_events_props_json,
-        "events_stream_sessionize": q_events_stream_sessionize,
-        "events_stream_dedup": q_events_stream_dedup,
-        "sql_function_surface": q_sql_function_surface,
-        "doc_text_stats": q_doc_text_stats,
-        "doc_lang_id": q_doc_lang_id,
-        "doc_fingerprints": q_doc_fingerprints,
-        "doc_repetition": q_doc_repetition,
-        "doc_quality_flags": q_doc_quality_flags,
-        "transcript_tokens_bpe": q_transcript_tokens_bpe,
-        "sft_pairs": q_sft_pairs,
-        "preference_pairs": q_preference_pairs,
-        "sft_pairs_budget": q_sft_pairs_budget,
+        # ---- r5-verified, outside the r06/r07 window: dedup family ----
         "dedup_exact": q_dedup_exact,
         "dedup_minhash_sigs": q_dedup_minhash_sigs,
         "dedup_minhash_pairs": q_dedup_minhash_pairs,
@@ -2020,6 +1927,92 @@ _RAW_QUERIES: dict = {
         "dedup_apply": q_dedup_apply,
         "dedup_apply_full": q_dedup_apply_full,
         "token_vocab_topk": q_token_vocab_topk,
+        # ---- r5-verified: extraction + pipeline ----
+        "extract_kind_rollup": q_extract_kind_rollup,
+        "extract_passages": q_extract_passages,
+        "extract_numerics": q_extract_numerics,
+        "extract_tables": q_extract_tables,
+        "extract_spans": q_extract_spans,
+        "conversation_rollup": q_conversation_rollup,
+        "conversation_documents_salted": q_conversation_documents_salted,
+        "pipeline_lineage": q_pipeline_lineage,
+        # ---- r5-verified: text stats / SFT / SQL surface ----
+        "doc_text_stats": q_doc_text_stats,
+        "doc_lang_id": q_doc_lang_id,
+        "doc_fingerprints": q_doc_fingerprints,
+        "doc_repetition": q_doc_repetition,
+        "doc_quality_flags": q_doc_quality_flags,
+        "transcript_tokens_bpe": q_transcript_tokens_bpe,
+        "sft_pairs": q_sft_pairs,
+        "preference_pairs": q_preference_pairs,
+        "sft_pairs_budget": q_sft_pairs_budget,
+        "sql_function_surface": q_sql_function_surface,
+        "events_stream_sessionize": q_events_stream_sessionize,
+        # =============== verification window boundary (50) ===============
+        # r5-verified; rotate into the next window (they leave the
+        # two-artifact horizon once a new artifact lands)
+        "pricing_summary": q_pricing_summary,
+        "top_customers": q_top_customers,
+        "events_daily": q_events_daily,
+        "shipping_priority": q_shipping_priority,
+        "regional_volume": q_regional_volume,
+        "top_suppliers_per_nation": q_top_suppliers_per_nation,
+        "customers_without_orders": q_customers_without_orders,
+        "events_grouping_sets": q_events_grouping_sets,
+        "asof_latest_click": q_asof_latest_click,
+        "events_salted_daily": q_events_salted_daily,
+        "events_retention": q_events_retention,
+        "events_sessionize": q_events_sessionize,
+        "events_props_json": q_events_props_json,
+        "events_stream_dedup": q_events_stream_dedup,
+        # verified in CORRECTNESS_r06.json / r07.json
+        "corpus_pack_shards": q_corpus_pack_shards,
+        "dedup_substring_spans": q_dedup_substring_spans,
+        "dedup_substring_apply": q_dedup_substring_apply,
+        "winnow_fingerprints": q_winnow_fingerprints,
+        "dedup_stream_ingest": q_dedup_stream_ingest,
+        "corpus_line_dedup": q_corpus_line_dedup,
+        "corpus_line_dedup_report": q_corpus_line_dedup_report,
+        "corpus_decontaminate": q_corpus_decontaminate,
+        "corpus_decontaminate_spans": q_corpus_decontaminate_spans,
+        "corpus_temperature_sample": q_corpus_temperature_sample,
+        "corpus_mixture_sample": q_corpus_mixture_sample,
+        "corpus_splits": q_corpus_splits,
+        "corpus_snapshot_diff": q_corpus_snapshot_diff,
+        "corpus_curate": q_corpus_curate,
+        "corpus_curate_funnel": q_corpus_curate_funnel,
+        "events_interval_join": q_events_interval_join,
+        "events_stream_join": q_events_stream_join,
+        "events_stream_enrich": q_events_stream_enrich,
+        "events_pivot_daily": q_events_pivot_daily,
+        "events_funnel": q_events_funnel,
+        "events_funnel_census": q_events_funnel_census,
+        "events_hll_daily": q_events_hll_daily,
+        "events_quantiles_approx": q_events_quantiles_approx,
+        "multimodal_ppm_decode": q_multimodal_ppm_decode,
+        "multimodal_wav_decode": q_multimodal_wav_decode,
+        "multimodal_gif_meta": q_multimodal_gif_meta,
+        "multimodal_features": q_multimodal_features,
+        "doc_tfidf_top_terms": q_doc_tfidf_top_terms,
+        "doc_unigram_nll": q_doc_unigram_nll,
+        "sft_pairs_budget_tokens": q_sft_pairs_budget_tokens,
+        "corpus_stratified_sample": q_corpus_stratified_sample,
+        "corpus_heavy_hitters": q_corpus_heavy_hitters,
+        "doc_pii_redact": q_doc_pii_redact,
+        "ann_cosine_topk": q_ann_cosine_topk,
+        "embedding_incremental_pairs": q_embedding_incremental_pairs,
+        "embedding_near_pairs": q_embedding_near_pairs,
+        "embedding_near_pairs_lsh": q_embedding_near_pairs_lsh,
+        "ann_lsh_topk_probe": q_ann_lsh_topk_probe,
+        "ann_ivf_assignments": q_ann_ivf_assignments,
+        "ann_ivf_trained_topk": q_ann_ivf_trained_topk,
+        "semdedup_losers": q_semdedup_losers,
+        "semdedup_wave_losers": q_semdedup_wave_losers,
+        "semdedup_retroactive_losers": q_semdedup_retroactive_losers,
+        "corpus_dsir_weights": q_corpus_dsir_weights,
+        "corpus_dsir_select": q_corpus_dsir_select,
+        "corpus_classifier_scores": q_corpus_classifier_scores,
+        "ann_index_probe": q_ann_index_probe,
     }
 
 

@@ -154,14 +154,14 @@ def probe_index_batch(spark: SparkSession, path: str, queries: DataFrame,
     driver/executor broadcast build.
     """
     planes = planes or lsh_planes()
-    from .dedup import _adopt_slot
-    qb = _adopt_slot(
+    from . import slots
+    qb = slots.memo(
         "ann_probe_qb",
-        (queries.select(F.col(qid_col).alias("qid"),
-                        F.col(vec_col).alias("qv"))
-         .withColumn("qbucket", bucket_expr(F.col("qv"), planes))
-         .withColumn("qnrm", norm(F.col("qv"))))
-        .persist())
+        queries.select(F.col(qid_col).alias("qid"),
+                       F.col(vec_col).alias("qv"))
+        .withColumn("qbucket", bucket_expr(F.col("qv"), planes))
+        .withColumn("qnrm", norm(F.col("qv"))),
+        lambda q: q.persist())
     # census the PERSISTED probe side (ADVICE r6: counting the raw query
     # lineage evaluated it twice — once for the census, once in the join)
     bcast_ok = qb.count() <= max_broadcast_queries

@@ -121,8 +121,8 @@ def duplicate_clusters(pairs: DataFrame, max_iterations: int = 15,
                                  F.col("id_a").alias("dst")))
              .distinct()
              .repartition(F.col("dst")))
-    from engine.datawork.dedup import _cache_slot
-    edges = _cache_slot("cluster_edges", edges)
+    from engine.datawork import slots
+    edges = slots.memo("cluster_edges", edges, slots.persist)
     labels = (edges.select(F.col("src").alias("id")).distinct()
               .withColumn("label", F.col("id")))
 

@@ -275,28 +275,31 @@ def _funnel_stages(docs: DataFrame, bench: DataFrame,
     — the shared construction behind curate_survivors / curate_funnel."""
     from .clusters import duplicate_clusters
     from .corpus import deduplicated_corpus_full
-    from .dedup import _keyed_slot, _stage_slot, minhash_lsh_candidates
+    from . import slots
+    from .dedup import minhash_lsh_candidates
     from .textstats import with_quality_flags
     cols = docs.columns
-    # every boundary is a lineage-TRUNCATING _stage_slot: the funnel is
-    # deep, and each un-truncated downstream action re-analyzes the whole
-    # upstream tree on the driver (measured 4 s to count a cached 4k-row
-    # stage). Truncated, every later stage/count plans over a tiny scan.
-    quality = _stage_slot(
+    # every boundary is TRUNCATED (slots.truncate): the funnel is deep,
+    # and each un-truncated downstream action re-analyzes the whole
+    # upstream tree on the driver. Truncated, every later stage/count
+    # plans over a tiny scan.
+    quality = slots.memo(
         "curate_quality",
         (with_quality_flags(docs, text_col=text_col)
-         .filter(F.col("pass_quality")).select(*cols)))
+         .filter(F.col("pass_quality")).select(*cols)),
+        slots.truncate)
     # the cluster labels come out of pointer doubling already truncated
-    # (checkpoint scan) and could never sameSemantics-match across calls —
-    # keyed on the INPUT (candidate) plan instead, a funnel report reuses
-    # the labels a curate call just converged
-    cand = minhash_lsh_candidates(quality, id_col=id_col, text_col=text_col)
-    clusters = _keyed_slot("curate_clusters", cand,
-                           lambda: duplicate_clusters(cand))
-    deduped = _stage_slot(
+    # (checkpoint scan) — keyed on the INPUT (candidate) plan, a funnel
+    # report reuses the labels a curate call just converged
+    clusters = slots.memo(
+        "curate_clusters",
+        minhash_lsh_candidates(quality, id_col=id_col, text_col=text_col),
+        duplicate_clusters)
+    deduped = slots.memo(
         "curate_deduped",
         deduplicated_corpus_full(quality, clusters, id_col=id_col,
-                                 text_col=text_col))
+                                 text_col=text_col),
+        slots.truncate)
     flagged = (contamination_report(deduped, bench, id_col=id_col,
                                     text_col=text_col)
                .filter(F.col("hit_ratio") >= contamination_max)
@@ -310,14 +313,14 @@ def curate_corpus(docs: DataFrame, bench: DataFrame, budget: int,
                   text_col: str = "text") -> DataFrame:
     """quality → dedup → decontaminate → temperature-sample: the final
     sampled mixture (see curate_survivors for the funnel stages)."""
-    from .dedup import _stage_slot
+    from . import slots
     survivors = curate_survivors(docs, bench, contamination_max,
                                  id_col, text_col)
     # temperature_sample consumes its input twice (group census + keep
     # join) and needs only (id, group) — truncate that narrow projection
     # so the decontamination anti-join runs once, not per consumer
-    keyed = _stage_slot("curate_keyed",
-                        survivors.select(id_col, group_col))
+    keyed = slots.memo("curate_keyed", survivors.select(id_col, group_col),
+                       slots.truncate)
     return temperature_sample(keyed, budget=budget,
                               group_col=group_col, id_col=id_col)
 
@@ -337,12 +340,13 @@ def curate_funnel(docs: DataFrame, bench: DataFrame, budget: int,
     evaluates each exactly once). The counts are collected as the stages
     materialize and returned as a local relation — same rows, same
     schema."""
-    from .dedup import _stage_slot
+    from . import slots
     spark = docs.sparkSession
     n_input = docs.count()
     quality, deduped, clean = _funnel_stages(docs, bench, contamination_max,
                                              id_col, text_col)
-    keyed = _stage_slot("curate_keyed", clean.select(id_col, group_col))
+    keyed = slots.memo("curate_keyed", clean.select(id_col, group_col),
+                       slots.truncate)
     n_clean = keyed.count()
     sampled = temperature_sample(keyed, budget=budget, group_col=group_col,
                                  id_col=id_col)

@@ -66,7 +66,8 @@ def dsir_weights(raw: DataFrame, target: DataFrame,
     AFTER the per-doc sum, the established engine-exactness pattern for
     double reductions.
     """
-    from .dedup import _cache_slot, _ensure_parallelism
+    from . import slots
+    from .dedup import _ensure_parallelism
     # the raw gram stream feeds BOTH the model counts and the scoring —
     # persist the bucketed stream (two ints/row) in a bounded cache slot
     # so the explode+md5 runs once per job; uncached (evicted) the plan
@@ -88,13 +89,14 @@ def dsir_weights(raw: DataFrame, target: DataFrame,
     grams = F.when(
         F.trim(F.coalesce(F.col(text_col), F.lit(""))) != "",
         F.concat(w, bi))
-    bstream = _cache_slot(
+    bstream = slots.memo(
         "dsir_raw_buckets",
         _ensure_parallelism(raw)
         .select(F.col(id_col).alias("id"),
                 F.explode_outer(grams).alias("gram"))
         .select("id", F.when(F.col("gram").isNotNull(),
-                             _bucket(F.col("gram"), buckets)).alias("b")))
+                             _bucket(F.col("gram"), buckets)).alias("b")),
+        slots.persist)
     live = bstream.filter(F.col("b").isNotNull())
     cr = live.groupBy("b").agg(F.count("*").alias("cr"))
     nr = live.agg(F.count("*").alias("nr"))

@@ -268,10 +268,11 @@ def semdedup_wave_losers(new_emb: DataFrame, index_path: str,
     censused with the same fallback as incremental_embedding_pairs."""
     from pyspark.sql import Window
     spark = new_emb.sparkSession
-    from .dedup import _stage_slot
+    from . import slots
     cent = spark.read.parquet(_sub(index_path, CELLS))
-    wave = _stage_slot("sem_wave",
-                       _semantic_assign(new_emb, cent, id_col, vec_col))
+    wave = slots.memo("sem_wave",
+                      _semantic_assign(new_emb, cent, id_col, vec_col),
+                      slots.truncate)
 
     n_wave = wave.count()
     hint = F.broadcast if n_wave <= max_broadcast_rows else (lambda df: df)
@@ -350,10 +351,11 @@ def retroactive_wave_losers(new_emb: DataFrame, index_path: str,
     to this ``threshold``."""
     from pyspark.sql import Window
     spark = new_emb.sparkSession
-    from .dedup import _stage_slot
+    from . import slots
     cent = spark.read.parquet(_sub(index_path, CELLS))
-    wave = _stage_slot("sem_wave",
-                       _semantic_assign(new_emb, cent, id_col, vec_col))
+    wave = slots.memo("sem_wave",
+                      _semantic_assign(new_emb, cent, id_col, vec_col),
+                      slots.truncate)
     n_wave = wave.count()
     hint = F.broadcast if n_wave <= max_broadcast_rows else (lambda df: df)
 
@@ -409,17 +411,20 @@ def incremental_embedding_pairs(new_emb: DataFrame, index_path: str,
     persisted + wave population exceeds it is dropped from candidate
     generation on BOTH sides — exactly what the full recompute's guard
     would do, so exactness survives the cap."""
-    from .dedup import _adopt_slot, _stage_slot
+    from . import slots
     spark = new_emb.sparkSession
     bands, rows = read_layout(spark, index_path)
-    wave = _stage_slot("embincr_wave",
-                       _base(new_emb, id_col, vec_col, bands, rows))
+    wave = slots.memo("embincr_wave",
+                      _base(new_emb, id_col, vec_col, bands, rows),
+                      slots.truncate)
     # pre-partitioned by (band, bucket) so the occupancy aggregate and both
     # candidate joins reuse the cache's partitioning (no extra Exchange);
-    # slot registration bounds the session's cached blocks (ADVICE r6)
-    b_new = _adopt_slot("embincr_b_new",
-                        _explode(wave, bands, rows)
-                        .repartition("band", "bucket").persist())
+    # slot registration bounds the session's cached blocks (ADVICE r6).
+    # Persisted lazily: the census count below materializes it.
+    b_new = slots.memo("embincr_b_new",
+                       _explode(wave, bands, rows)
+                       .repartition("band", "bucket"),
+                       lambda b: b.persist())
 
     # one census count materializes b_new AND its cached parent wave;
     # _explode emits exactly ``bands`` rows/vector, so the count IS
@@ -463,7 +468,7 @@ def incremental_embedding_pairs(new_emb: DataFrame, index_path: str,
     # both arms of the id semi-join) — persist the wave-proportional set so
     # AQE materializes the nn/no/distinct lineage once, not per consumer
     # (the incremental.py probe lesson; same bounded-slot contract)
-    cand = _stage_slot("embincr_cand", cand)
+    cand = slots.memo("embincr_cand", cand, slots.truncate)
 
     # exact-cosine verify: corpus vectors read ONLY for candidate ids
     # (id-sorted layout → row-group pruning); wave membership rides the

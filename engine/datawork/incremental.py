@@ -45,8 +45,9 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from .dedup import (MINHASH_BANDS, MINHASH_K, _adopt_slot, _band_explode,
-                    _stage_slot, minhash_signatures)
+from . import slots
+from .dedup import (MINHASH_BANDS, MINHASH_K, _band_explode,
+                    minhash_signatures)
 
 SIGS = "sigs"
 BUCKETS = "buckets"
@@ -151,8 +152,9 @@ def stream_dedup_ingest(stream_docs: DataFrame, index_path: str,
         # sign the wave ONCE: the probe's verify side and the index fold
         # read the same persisted signature table (r6 #7 — the old shape
         # paid the shingle+k-min pass twice per micro-batch)
-        sig = _stage_slot(
-            "incr_sig_new", minhash_signatures(batch_df, id_col, text_col))
+        sig = slots.memo(
+            "incr_sig_new", minhash_signatures(batch_df, id_col, text_col),
+            slots.truncate)
         pairs = incremental_verified_pairs(
             batch_df, index_path, id_col=id_col, text_col=text_col,
             threshold=threshold, max_bucket=max_bucket, presigned=sig)
@@ -254,16 +256,19 @@ def incremental_verified_pairs(new_docs: DataFrame, index_path: str,
     # ``presigned`` = the wave's ALREADY-persisted signature table (must be
     # minhash_signatures(new_docs, ...) rows) — the probe-then-fold loop
     # signs the wave once and shares it with append_to_index (r6 #7)
-    sig_new = presigned if presigned is not None else _stage_slot(
-        "incr_sig_new", minhash_signatures(new_docs, id_col, text_col, n, k))
+    sig_new = presigned if presigned is not None else slots.memo(
+        "incr_sig_new", minhash_signatures(new_docs, id_col, text_col, n, k),
+        slots.truncate)
     # repartitioned by (band, bucket) BEFORE the persist (the
     # _minhash_bucket_slot trick): touched/distinct, the wave occupancy
     # aggregate, and both candidate joins all key on (band, bucket), so
     # they read the cache's outputPartitioning instead of each adding an
-    # Exchange of the wave buckets
-    b_new = _adopt_slot("incr_b_new",
-                        _band_explode(sig_new, k, bands)
-                        .repartition("band", "bucket").persist())
+    # Exchange of the wave buckets. Persisted lazily: the census count
+    # below materializes it.
+    b_new = slots.memo("incr_b_new",
+                       _band_explode(sig_new, k, bands)
+                       .repartition("band", "bucket"),
+                       lambda b: b.persist())
 
     # census: ONE count of the persisted bucket table — _band_explode emits
     # exactly ``bands`` rows/doc, so b_new.count() IS the broadcast-size
@@ -320,9 +325,10 @@ def incremental_verified_pairs(new_docs: DataFrame, index_path: str,
     # redundant shuffle stages and seconds of driver planning). cand is
     # wave-proportional by construction, so the lineage-truncating slot is
     # bounded by the same contract as the broadcasts above — and the
-    # truncation keeps the verify join's analyzed tree small (the
-    # _stage_slot rationale).
-    cand = _stage_slot("incr_cand", cand)
+    # truncation keeps the verify join's analyzed tree small (see
+    # slots.truncate). Its key scans the index, so a probe after an
+    # append to the index misses and recomputes.
+    cand = slots.memo("incr_cand", cand, slots.truncate)
 
     # verify via the signature estimate — corpus signatures are read ONLY
     # for candidate ids (semi-join; candidate volume ∝ wave, so the same

@@ -20,7 +20,7 @@ Cost at any scale: one range shuffle + one broadcast join; memory per task
 is one Arrow batch. Output is independent of where the range sampler puts
 partition boundaries (prefix sums are associative), so the result is
 deterministic even though the boundaries need not be. The partitioned
-cumsum table is persisted via the dedup cache-slot registry — REQUIRED for
+cumsum table is persisted through engine/datawork/slots.py — REQUIRED for
 cost (the totals job and the final projection share it), while output
 correctness holds either way since the offsets join keys on the pid each
 row actually carries.
@@ -50,7 +50,7 @@ def pack_shards(docs: DataFrame, budget: int, id_col: str = "doc_id",
     be non-null and unique (the dedup family's contract); the stream order
     is ascending ``id_col``. NULL token counts pack as 0.
     """
-    from .dedup import _cache_slot
+    from . import slots
 
     if budget < 1:
         raise ValueError(f"budget must be >= 1, got {budget}")
@@ -80,8 +80,9 @@ def pack_shards(docs: DataFrame, budget: int, id_col: str = "doc_id",
             pdf["_cum"] = c
             yield pdf
 
-    local = _cache_slot("pack_cumsum",
-                        parted.mapInPandas(_running, schema=cum_schema))
+    local = slots.memo("pack_cumsum",
+                       parted.mapInPandas(_running, schema=cum_schema),
+                       slots.persist)
     totals = (local.groupBy("_pid").agg(F.sum("n_tokens").alias("t"))
               .collect())
     offsets, acc = [], 0

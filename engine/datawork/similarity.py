@@ -66,70 +66,6 @@ def norm(vec: Column) -> Column:
         F.lit(0.0), lambda acc, x: acc + x))
 
 
-def dot_pair_udf():
-    """Arrow-batched twin of the pairwise ``aggregate(zip_with(a, b,
-    x·y), 0.0, acc+x)`` spelling — BITWISE identical on every row both
-    engines produce (the banded_sig_udf pattern, VERDICT r6 #4 applied to
-    the dot products).
-
-    The Catalyst spelling is an interpreted higher-order fold per row (no
-    codegen for lambda functions) — the dominant per-row cost of every
-    assignment crossJoin and cosine verify join. This kernel vectorizes
-    ACROSS rows while looping the dims IN ORDER, so each accumulator
-    update is the same IEEE-754 double sequence the expression (and the
-    DuckDB oracle's list fold) performs: ``acc = acc + a[d]·b[d]`` for
-    d = 0..dim-1.
-
-    Null algebra (differential fuzz test pins it): a NULL array on either
-    side → NULL; arrays of UNEQUAL length → NULL (zip_with pads the short
-    side with nulls, poisoning the fold); two empty arrays → 0.0 (empty
-    fold = the init); a null ELEMENT inside an array → NULL (it reaches
-    the kernel as NaN, and the pandas→Arrow return conflates NaN with
-    null — which happens to be exactly the expression's fold-poisoning).
-    The one documented divergence: an input element that is a REAL NaN
-    yields NaN from the expression but NULL from the kernel; no declared
-    surface stores NaN vector elements (NaN cosines from zero-norm
-    vectors arise in the DIVISION, which stays a Spark expression and is
-    therefore identical on both paths)."""
-    import numpy as np
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("double")
-    def dd(va, vb):
-        import pandas as pd
-        n = len(va)
-        out = [None] * n
-        by_len: dict = {}
-        for i in range(n):
-            a, b = va.iat[i], vb.iat[i]
-            if a is None or b is None or len(a) != len(b):
-                continue
-            by_len.setdefault(len(a), []).append(i)
-        for length, idxs in by_len.items():
-            if length == 0:
-                for i in idxs:
-                    out[i] = 0.0
-                continue
-            am = np.empty((len(idxs), length), dtype=np.float64)
-            bm = np.empty((len(idxs), length), dtype=np.float64)
-            for r, i in enumerate(idxs):
-                am[r, :] = va.iat[i]
-                bm[r, :] = vb.iat[i]
-            acc = np.zeros(len(idxs), dtype=np.float64)
-            for d in range(length):  # dim order = the expression's fold order
-                acc = acc + am[:, d] * bm[:, d]
-            for r, i in enumerate(idxs):
-                out[i] = float(acc[r])
-        return pd.Series(out, dtype="float64")
-
-    # guide §4.4: a filter on a UDF-derived column gets pushed below the
-    # projection and the optimizer then evaluates the UDF TWICE (verified:
-    # two ArrowEvalPython nodes in the cosine-verify plan). The function is
-    # pure — asNondeterministic() only tells Catalyst not to duplicate or
-    # reorder it, halving every verify stage.
-    return dd.asNondeterministic()
-
-
 def cosine_to_const(vec: Column, query: Sequence[float]) -> Column:
     import math
     qn = math.sqrt(sum(v * v for v in query))
@@ -147,22 +83,6 @@ def bucket_of(query: Sequence[float], planes: List[List[float]]) -> str:
     return "".join(
         "1" if sum(q * c for q, c in zip(query, p)) > 0 else "0" for p in planes)
 
-
-#: Crossover switches for the Arrow dot kernel (dot_pair_udf) vs the
-#: interpreted fold, measured on this 64-dim surface (local[32], best-of-2,
-#: filter+count over synthesized pairs): 0.1M rows expr 0.47 s / kernel
-#: 0.68 s; 1M rows 0.50 / 1.38; 4M rows 4.30 / 3.35. The kernel ships both
-#: 64-dim vectors through Arrow per row (~1 KB/row), so it pays only once
-#: the fold count amortizes the transfer + Python stage dispatch —
-#: unlike the 256-plane signature fold (banded_sig_udf), where the
-#: expression does 256 folds/row and the kernel wins ~20×. Verify joins
-#: evaluate one fold per CANDIDATE PAIR (≈ corpus_n × mean bucket
-#: occupancy ≫ corpus_n), so the corpus census crossing 100k vectors
-#: implies pair volumes well past the 4M-row crossover; assignment
-#: evaluates n_cells folds per vector, so a large codebook is the
-#: amortizer there.
-DOT_KERNEL_MIN_ROWS = 100_000   # corpus census, cosine_pairs_above auto path
-DOT_KERNEL_MIN_CELLS = 64       # codebook size, argmax assignment
 
 IVF_CELLS = 16
 IVF_NPROBE = 2
@@ -210,23 +130,23 @@ def train_kmeans(df: DataFrame, n_cells: int = IVF_CELLS,
     + one hash aggregation; the centroid table is localCheckpoint'd per
     iteration so the plan stays flat over any iteration count. The base
     (v, nrm, fx) projection is computed once and cached."""
-    from pyspark.sql import Window
-    from .dedup import _cache_slot, _keyed_slot
-    base = _cache_slot(
+    from . import slots
+    base = slots.memo(
         "ivf_kmeans_base",
         df.select(F.col(id_col).alias("id"),
                   F.col(vec_col).cast("array<double>").alias("v"))
           .withColumn("nrm", norm(F.col("v")))
-          .withColumn("fx", fixed_point(F.col("v"))))
+          .withColumn("fx", fixed_point(F.col("v"))),
+        slots.persist)
     # the trained codebook is a deterministic function of (base, n_cells,
     # iters) and is re-derived by every consumer in a combined run (IVF
     # assignment + top-k + both SemDeDup index builds each call
     # train_kmeans): memoize it keyed on the base plan, one slot per
     # parameterization. The result is localCheckpoint-flat already (the
     # per-iteration truncation), so the slot returns a tiny-scan frame.
-    return _keyed_slot(
+    return slots.memo(
         f"kmeans_cent_{n_cells}_{iters}_{dim}", base,
-        lambda: _train_kmeans_loop(base, n_cells, iters, dim))
+        lambda b: _train_kmeans_loop(b, n_cells, iters, dim))
 
 
 def _train_kmeans_loop(base: DataFrame, n_cells: int, iters: int,
@@ -244,8 +164,7 @@ def _train_kmeans_loop(base: DataFrame, n_cells: int, iters: int,
     mean = F.array(*[F.col(f"s{d}") / (F.col("cnt") * float(KMEANS_SCALE))
                      for d in range(dim)])
     for _ in range(iters):
-        assigned = _assign_cells(base, cent,
-                                 kernel=n_cells >= DOT_KERNEL_MIN_CELLS)
+        assigned = _assign_cells(base, cent)
         newc = (assigned.groupBy("cell")
                 .agg(F.count("*").alias("cnt"), *sums)
                 .select("cell", mean.alias("cv")))
@@ -258,8 +177,7 @@ def _train_kmeans_loop(base: DataFrame, n_cells: int, iters: int,
 
 def _assign_cells(base: DataFrame, cent: DataFrame,
                   keep_score: bool = False,
-                  nprobe: int = 1,
-                  kernel: bool = False) -> DataFrame:
+                  nprobe: int = 1) -> DataFrame:
     """argmax-cosine assignment of a (id, v, nrm[, fx]) base against a
     (cell, cv) centroid table — the shared kernel of ivf_assignments and
     every k-means iteration. Broadcast crossJoin: n_cells rows per input
@@ -269,18 +187,10 @@ def _assign_cells(base: DataFrame, cent: DataFrame,
     per (vector, probed cell) — semdedup's cluster-boundary closure)."""
     from pyspark.sql import Window
     c = cent.select("cell", "cv").withColumn("cnrm", norm(F.col("cv")))
-    # ``kernel=True`` swaps the interpreted fold for the Arrow twin
-    # (bitwise-equal; see dot_pair_udf) — a win only once the evaluation
-    # row count (vectors x cells) amortizes the Python stage dispatch;
-    # measured a net REGRESSION at the sf0.1 bench scale, so small-N
-    # callers keep the expression (OPTIMIZATION_r07.md has the numbers)
-    dotprod = (dot_pair_udf()(F.col("v").cast("array<double>"),
-                              F.col("cv").cast("array<double>"))
-               if kernel else F.aggregate(
-                   F.zip_with(F.col("v").cast("array<double>"),
-                              F.col("cv").cast("array<double>"),
-                              lambda x, y: x * y),
-                   F.lit(0.0), lambda acc, x: acc + x))
+    dotprod = F.aggregate(
+        F.zip_with(F.col("v").cast("array<double>"),
+                   F.col("cv").cast("array<double>"), lambda x, y: x * y),
+        F.lit(0.0), lambda acc, x: acc + x)
     scored = (base.crossJoin(F.broadcast(c))
               .withColumn("ccos", F.round(
                   dotprod / (F.col("nrm") * F.col("cnrm")), 6)))
@@ -304,9 +214,7 @@ def ivf_assignments(df: DataFrame, id_col: str = "vec_id",
         _default_centroids(df, id_col, vec_col, n_cells)
     base = df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"),
                      norm(F.col(vec_col)).alias("nrm"))
-    return (_assign_cells(base, cent,
-                          kernel=n_cells >= DOT_KERNEL_MIN_CELLS)
-            .select("id", "cell"))
+    return _assign_cells(base, cent).select("id", "cell")
 
 
 def semdedup_losers(df: DataFrame, threshold: float = 0.95,
@@ -353,8 +261,7 @@ def semdedup_losers(df: DataFrame, threshold: float = 0.95,
         df, n_cells=n_cells, id_col=id_col, vec_col=vec_col)
     base = df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"),
                      norm(F.col(vec_col)).alias("nrm"))
-    asg = _assign_cells(base, cent, keep_score=True, nprobe=nprobe,
-                        kernel=n_cells >= DOT_KERNEL_MIN_CELLS)
+    asg = _assign_cells(base, cent, keep_score=True, nprobe=nprobe)
     if max_cluster is not None:
         sizes = asg.groupBy("cell").agg(F.count("*").alias("_csz"))
         asg = (asg.join(F.broadcast(sizes.filter(F.col("_csz") > max_cluster)
@@ -585,12 +492,13 @@ def banded_buckets_shared(df: DataFrame, id_col: str = "vec_id",
     """(id, band, bucket) derived from the ``embed_lsh_base`` cache slot
     when a cosine_pairs_above run already populated it (opportunistic —
     a standalone telemetry run computes the signatures fresh WITHOUT
-    paying a persist; see dedup._cache_slot_peek). Values are identical
-    to banded_buckets: both slice the same banded_sig_expr string."""
-    from .dedup import _cache_slot_peek
-    base = _cache_slot_peek(
-        "embed_lsh_base", _lsh_base_plan(df, id_col, vec_col, bands, rows))
-    return _explode_bands(base.select("id", "sig"), bands, rows)
+    paying a persist; see slots.peek). Values are identical to
+    banded_buckets: both slice the same banded_sig_expr string."""
+    from . import slots
+    plan = _lsh_base_plan(df, id_col, vec_col, bands, rows)
+    base = slots.peek("embed_lsh_base", plan)
+    return _explode_bands((plan if base is None else base)
+                          .select("id", "sig"), bands, rows)
 
 
 def candidate_pairs_from_banded(banded: DataFrame,
@@ -640,17 +548,12 @@ def cosine_pairs_above(df: DataFrame, threshold: float = 0.95,
     """
     from .dedup import _ensure_parallelism
 
-    def verify(pairs_ab, kernel=False):
-        # exact-cosine verify, shared by both paths. kernel=True swaps the
-        # interpreted fold for its bitwise-equal Arrow twin (dot_pair_udf)
-        # — identical values by the fuzz pin, chosen per corpus size below.
-        dotprod = (dot_pair_udf()(F.col("a.v").cast("array<double>"),
-                                  F.col("b.v").cast("array<double>"))
-                   if kernel else F.aggregate(
-                       F.zip_with(F.col("a.v").cast("array<double>"),
-                                  F.col("b.v").cast("array<double>"),
-                                  lambda x, y: x * y),
-                       F.lit(0.0), lambda acc, x: acc + x))
+    def verify(pairs_ab):
+        # exact-cosine verify, shared by both paths
+        dotprod = F.aggregate(
+            F.zip_with(F.col("a.v").cast("array<double>"),
+                       F.col("b.v").cast("array<double>"), lambda x, y: x * y),
+            F.lit(0.0), lambda acc, x: acc + x)
         return (pairs_ab
                 .select(F.col("a.id").alias("id_a"),
                         F.col("b.id").alias("id_b"),
@@ -665,7 +568,6 @@ def cosine_pairs_above(df: DataFrame, threshold: float = 0.95,
         a, b = base.alias("a"), base.alias("b")
         return verify(a.join(b, F.col("a.id") < F.col("b.id")))
 
-    use_kernel = False
     if rows is None:
         # self-scaling layout: ONE metadata count (parquet footer statistics
         # — no scan) picks rows ≈ log₂(N / target bucket population); the
@@ -674,26 +576,22 @@ def cosine_pairs_above(df: DataFrame, threshold: float = 0.95,
         import logging
         n = df.count()
         rows = auto_rows(n)
-        # the same census picks the verify spelling: past the crossover the
-        # interpreted fold dominates the verify join and the Arrow twin
-        # wins; below it the Python stage dispatch costs more than it saves
-        # (measured — see DOT_KERNEL_MIN_ROWS)
-        use_kernel = n >= DOT_KERNEL_MIN_ROWS
         logging.getLogger(__name__).info(
-            "cosine_pairs_above auto layout: n=%d -> bands=%d rows=%d "
-            "kernel=%s", n, bands, rows, use_kernel)
+            "cosine_pairs_above auto layout: n=%d -> bands=%d rows=%d",
+            n, bands, rows)
 
     # sign bits for all bands·rows planes computed once; cached because the
     # candidate join consumes the banded table twice and the verify join
-    # consumes base twice (bounded slot, see dedup._cache_slot). The plan
-    # is built by _lsh_base_plan so guard telemetry can share the slot.
-    from .dedup import _cache_slot
-    base = _cache_slot(
-        "embed_lsh_base", _lsh_base_plan(df, id_col, vec_col, bands, rows))
+    # consumes base twice (bounded slot, see slots.memo). The plan is
+    # built by _lsh_base_plan so guard telemetry can share the slot.
+    from . import slots
+    base = slots.memo(
+        "embed_lsh_base", _lsh_base_plan(df, id_col, vec_col, bands, rows),
+        slots.persist)
     banded = _explode_bands(base.select("id", "sig"), bands, rows)
     cand = candidate_pairs_from_banded(banded, max_bucket)
     a = base.select(F.col("id"), F.col("v"), F.col("nrm")).alias("a")
     b = base.select(F.col("id"), F.col("v"), F.col("nrm")).alias("b")
     pairs_ab = (cand.join(a, cand.id_a == F.col("a.id"))
                     .join(b, cand.id_b == F.col("b.id")))
-    return verify(pairs_ab, kernel=use_kernel)
+    return verify(pairs_ab)

@@ -192,18 +192,19 @@ def winnow_similar_pairs(docs: DataFrame, k: int = 4, w: int = 5,
     evidence — the same hot-key guard as dedup's MinHash-LSH buckets,
     bounding the per-gram pair fan-out at max_df^2).
     """
-    from .dedup import _cache_slot
+    from . import slots
     # the selection pass (gram explode + two window functions) feeds the
     # df-count AND both self-join sides — persist it once (repartitioned
     # by gram so the count, the guard join, and the pair join all run on
     # one co-partitioning; the fingerprint table is ~2/(w+1) of the gram
     # table, signature-sized like dedup's minhash sigs, not corpus-sized)
-    fp = _cache_slot(
+    fp = slots.memo(
         "winnow_fp",
         winnow_fingerprints(docs, k=k, w=w, id_col=id_col,
                             text_col=text_col)
         .select(F.col(id_col).alias("id"), "gram").distinct()
-        .repartition("gram"))
+        .repartition("gram"),
+        slots.persist)
     df_cnt = fp.groupBy("gram").agg(F.count("*").alias("df"))
     keep = df_cnt.filter((F.col("df") >= 2) & (F.col("df") <= max_df))
     fp_k = fp.join(keep.select("gram"), "gram")

@@ -107,6 +107,26 @@ def completed_buckets(spark: SparkSession, out_sink) -> DataFrame:
         raise
 
 
+def _lineage_rows(df: DataFrame, run_id: str, wave: int,
+                 wall_ms: int) -> DataFrame:
+    """Bucket-granular manifest rows (LINEAGE_SCHEMA) for the extracted
+    rows in ``df``: one row per conv_bucket, partition_id kept as a
+    representative for debugging. The per-wave commit and the resume
+    backfill (wave=-1) both build their rows here."""
+    return (df.groupBy("conv_bucket")
+            .agg(F.min("partition_id").alias("partition_id"),
+                 F.count("*").alias("turns_processed"),
+                 F.sum(F.when(F.col("error").isNotNull(), 1).otherwise(0))
+                  .alias("extraction_failures"),
+                 F.sum("bytes_in").alias("bytes_parsed"))
+            .withColumn("run_id", F.lit(run_id))
+            .withColumn("wave", F.lit(wave))
+            .withColumn("wall_ms", F.lit(wall_ms))
+            .withColumn("completed_at",
+                        F.lit(datetime.now(timezone.utc)).cast("timestamp"))
+            .select([f.name for f in LINEAGE_SCHEMA.fields]))
+
+
 def run_pipeline(spark: SparkSession, input_path: str, output_dir: str,
                  run_id: str, n_buckets: int = DEFAULT_BUCKETS,
                  waves: int = 4, salt_partitions: Optional[int] = None,
@@ -151,22 +171,10 @@ def run_pipeline(spark: SparkSession, input_path: str, output_dir: str,
             lin_buckets = spark.createDataFrame([], "conv_bucket int")
         orphans = done.join(F.broadcast(lin_buckets), "conv_bucket", "left_anti")
         if orphans.count():
-            backfill = (out_sink.read(EXTRACTED_SCHEMA)
-                        .join(F.broadcast(orphans), "conv_bucket", "left_semi")
-                        .groupBy("conv_bucket")
-                        .agg(F.min("partition_id").alias("partition_id"),
-                             F.count("*").alias("turns_processed"),
-                             F.sum(F.when(F.col("error").isNotNull(), 1)
-                                   .otherwise(0)).alias("extraction_failures"),
-                             F.sum("bytes_in").alias("bytes_parsed"))
-                        .withColumn("run_id", F.lit(run_id))
-                        .withColumn("wave", F.lit(-1))
-                        .withColumn("wall_ms", F.lit(0))
-                        .withColumn("completed_at",
-                                    F.lit(datetime.now(timezone.utc))
-                                    .cast("timestamp"))
-                        .select([f.name for f in LINEAGE_SCHEMA.fields]))
-            lineage_sink.append(backfill)
+            lineage_sink.append(_lineage_rows(
+                out_sink.read(EXTRACTED_SCHEMA)
+                .join(F.broadcast(orphans), "conv_bucket", "left_semi"),
+                run_id, wave=-1, wall_ms=0))
 
     total_processed = 0
     skipped = 0
@@ -215,20 +223,7 @@ def run_pipeline(spark: SparkSession, input_path: str, output_dir: str,
         wave_out = out_sink.read_partitions(wave_buckets, EXTRACTED_SCHEMA)
         if wave_out is None:  # a wave whose buckets had zero input rows
             wave_out = spark.createDataFrame([], EXTRACTED_SCHEMA)
-        # bucket-granular manifest (≤ n_buckets/waves rows per wave;
-        # partition_id kept as a representative for debugging)
-        lineage = (wave_out.groupBy("conv_bucket")
-                   .agg(F.min("partition_id").alias("partition_id"),
-                        F.count("*").alias("turns_processed"),
-                        F.sum(F.when(F.col("error").isNotNull(), 1).otherwise(0))
-                         .alias("extraction_failures"),
-                        F.sum("bytes_in").alias("bytes_parsed"))
-                   .withColumn("run_id", F.lit(run_id))
-                   .withColumn("wave", F.lit(wave))
-                   .withColumn("wall_ms", F.lit(wall_ms))
-                   .withColumn("completed_at",
-                               F.lit(datetime.now(timezone.utc)).cast("timestamp"))
-                   .select([f.name for f in LINEAGE_SCHEMA.fields]))
+        lineage = _lineage_rows(wave_out, run_id, wave, wall_ms)
         # one aggregation pass: the manifest is ≤ n_buckets/waves rows, so
         # collect it (scalar-scale), sum locally, write it back from the
         # driver — not a driver-side loop over data, a loop over the manifest

@@ -132,11 +132,9 @@ def compact_parquet(spark: SparkSession, path: str,
 
     Rewrites the table to ``ceil(total_bytes / target_bytes)`` files
     (at least one per partition value when ``partition_col`` is given,
-    so partition pruning keeps working), via an atomic
-    write-to-temp + swap: the live directory is replaced only after the
-    rewrite commits, and the pre-compaction data is moved aside, not
-    deleted, until the swap succeeds. Returns a stats dict
-    (files/bytes before and after).
+    so partition pruning keeps working) through ``atomic_rewrite``, so a
+    crash in the swap window is recoverable by ``recover_rewrite``.
+    Returns a stats dict (files/bytes before and after).
 
     Scale note: on a real cluster this is Iceberg's rewrite_data_files
     action (same math, snapshot-atomic); this is the parquet-directory
@@ -144,37 +142,23 @@ def compact_parquet(spark: SparkSession, path: str,
     reads are unaffected because compaction preserves content and the
     partition column.
     """
-    import math
-    import shutil
-    import uuid
-    from pathlib import Path
+    def _write(tmp: str) -> None:
+        df = spark.read.parquet(path).repartition(
+            _target_files(path, target_bytes),
+            *([F.col(partition_col)] if partition_col else []))
+        w = df.write.mode("overwrite")
+        (w.partitionBy(partition_col) if partition_col else w).parquet(tmp)
 
-    root = Path(path)
-    files = [p for p in root.rglob("*.parquet") if p.is_file()]
-    if not files:
-        raise ValueError(f"no parquet files under {path}")
-    before_bytes = sum(p.stat().st_size for p in files)
-    n_out = max(1, math.ceil(before_bytes / target_bytes))
-    df = spark.read.parquet(str(root))
-    tmp = root.with_name(f"{root.name}.compact-{uuid.uuid4().hex[:8]}")
-    old = root.with_name(f"{root.name}.precompact-{uuid.uuid4().hex[:8]}")
-    if partition_col:
-        (df.repartition(n_out, F.col(partition_col))
-           .write.mode("overwrite").partitionBy(partition_col)
-           .parquet(str(tmp)))
-    else:
-        df.repartition(n_out).write.mode("overwrite").parquet(str(tmp))
-    shutil.move(str(root), str(old))
-    try:
-        shutil.move(str(tmp), str(root))
-    except Exception:
-        shutil.move(str(old), str(root))  # roll back — original intact
-        raise
-    shutil.rmtree(str(old))
-    after = [p for p in root.rglob("*.parquet") if p.is_file()]
-    return {"files_before": len(files), "files_after": len(after),
-            "bytes_before": before_bytes,
-            "bytes_after": sum(p.stat().st_size for p in after)}
+    return atomic_rewrite(path, _write)
+
+
+def _target_files(path: str, target_bytes: int) -> int:
+    """ceil(bytes under ``path`` / target_bytes), at least 1."""
+    import math
+    from pathlib import Path
+    return max(1, math.ceil(sum(p.stat().st_size
+                                for p in Path(path).rglob("*.parquet")
+                                if p.is_file()) / target_bytes))
 
 
 def recover_rewrite(path: str) -> bool:
@@ -255,22 +239,12 @@ def compact_sorted_parquet(spark: SparkSession, path: str,
     sorted layout. ``aggregate_fn`` (optional, DataFrame -> DataFrame)
     lets a caller fold additive partial rows (stats tables) in the same
     atomic pass."""
-    import math
-    from pathlib import Path
-
-    root = Path(path)
-    files = [p for p in root.rglob("*.parquet") if p.is_file()]
-    if not files:
-        raise ValueError(f"no parquet files under {path}")
-    n_out = max(1, math.ceil(
-        sum(p.stat().st_size for p in files) / target_bytes))
-    df = spark.read.parquet(str(root))
-    if aggregate_fn is not None:
-        df = aggregate_fn(df)
-
     def _write(tmp: str) -> None:
-        (df.repartitionByRange(n_out, *sort_cols)
+        df = spark.read.parquet(path)
+        if aggregate_fn is not None:
+            df = aggregate_fn(df)
+        (df.repartitionByRange(_target_files(path, target_bytes), *sort_cols)
            .sortWithinPartitions(*sort_cols)
            .write.mode("overwrite").parquet(tmp))
 
-    return atomic_rewrite(str(root), _write)
+    return atomic_rewrite(path, _write)

@@ -14,7 +14,6 @@ reference's per-file error isolation, batch_pdf_processor.py:2754-2759).
 
 from __future__ import annotations
 
-import time
 from typing import Iterator
 
 import pandas as pd
@@ -45,7 +44,6 @@ def extract_batches(batches: Iterator[pd.DataFrame], n_buckets: int = 1024
         partition_id = -1
 
     for pdf in batches:
-        t0 = time.monotonic()
         n = len(pdf)
         if n == 0:
             continue
@@ -75,7 +73,6 @@ def extract_batches(batches: Iterator[pd.DataFrame], n_buckets: int = 1024
             stable_bucket(c, n_buckets) for c in pdf["conv_id"]]
         out["partition_id"] = partition_id
         out["bytes_in"] = [len(t) if isinstance(t, str) else 0 for t in pdf["text"]]
-        _ = time.monotonic() - t0  # timing folded into lineage downstream
         yield out
 
 

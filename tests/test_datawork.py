@@ -377,34 +377,37 @@ def test_cache_slot_reuses_semantically_equal_plan(spark, docs):
     minhash_lsh_candidates built (one signature aggregation per combined
     run); shingles are only reused opportunistically (standalone minhash
     must not pay the persist); slots are keyed per application."""
-    from engine.datawork import dedup
-    from engine.datawork.dedup import (
-        _CACHE_SLOTS, clear_cache_slots, minhash_lsh_candidates,
-        guard_report, ngram_jaccard_pairs)
-    clear_cache_slots(spark)  # isolate from slots other tests filled
+    from engine.datawork import dedup, slots
+    from engine.datawork.dedup import (minhash_lsh_candidates,
+                                       guard_report, ngram_jaccard_pairs)
+
+    def held(name):
+        entry = slots._SLOTS.get((app, name))
+        return entry[2] if entry is not None else None
+
+    slots.clear(spark)  # isolate from slots other tests filled
     minhash_lsh_candidates(docs).collect()
     app = spark.sparkContext.applicationId
-    bucket_obj = _CACHE_SLOTS[(app, "minhash_buckets")]
+    bucket_obj = held("minhash_buckets")
+    assert bucket_obj is not None
     guard_report(docs).collect()
     # same object: guard_report did NOT rebuild the signature aggregate
-    assert _CACHE_SLOTS[(app, "minhash_buckets")] is bucket_obj
+    assert held("minhash_buckets") is bucket_obj
     # buckets were already cached → the shingle census was guard_report's
     # only shingle consumer, so it STREAMED instead of filling the slot
-    assert (app, "shingles") not in _CACHE_SLOTS
+    assert held("shingles") is None
     # jaccard fills the shingles slot; a re-run of minhash then PEEKS it
     # and still lands on the same cached buckets
     ngram_jaccard_pairs(docs).collect()
-    shingle_obj = _CACHE_SLOTS[(app, "shingles")]
-    assert dedup._cache_slot_peek(
-        "shingles", dedup.shingles(docs)) is shingle_obj
+    shingle_obj = held("shingles")
+    assert slots.peek("shingles", dedup.shingles(docs)) is shingle_obj
     minhash_lsh_candidates(docs).collect()
-    assert _CACHE_SLOTS[(app, "minhash_buckets")] is bucket_obj
+    assert held("minhash_buckets") is bucket_obj
     # a different input does NOT peek-match and DOES replace on fill
     other = docs.limit(10)
-    assert dedup._cache_slot_peek(
-        "shingles", dedup.shingles(other)) is not shingle_obj
-    dedup._cache_slot("shingles", dedup.shingles(other))
-    assert _CACHE_SLOTS[(app, "shingles")] is not shingle_obj
+    assert slots.peek("shingles", dedup.shingles(other)) is not shingle_obj
+    slots.memo("shingles", dedup.shingles(other), slots.persist)
+    assert held("shingles") is not shingle_obj
 
 
 def test_deduplicated_corpus_full_layers_exact_over_guarded_lsh(spark):

@@ -42,9 +42,9 @@ def _split(emb, lo, hi):
 
 
 def _full_pairs_touching(emb, wave_ids, threshold=THRESH, max_bucket=None):
-    from engine.datawork.dedup import clear_cache_slots
+    from engine.datawork import slots
     from engine.datawork.similarity import LSH_ROWS, cosine_pairs_above
-    clear_cache_slots()
+    slots.clear()
     full = cosine_pairs_above(emb, threshold=threshold, bucketed=True,
                               rows=LSH_ROWS, max_bucket=max_bucket)
     rows = sorted((r.id_a, r.id_b, r.cosine) for r in full.collect()
@@ -178,9 +178,9 @@ def test_layout_frozen_in_index(spark, idx_path):
 
 
 def _semantic_full_losers(emb, cent, wave_ids, threshold=THRESH):
-    from engine.datawork.dedup import clear_cache_slots
+    # no slots.clear() here: with explicit centroids the recompute reads
+    # no slot, and a clear would release ``cent`` (a truncated slot result)
     from engine.datawork.similarity import semdedup_losers
-    clear_cache_slots()
     full = semdedup_losers(emb, threshold=threshold, centroids=cent)
     return sorted((r.id, r.cell, r.kept_id, r.cosine)
                   for r in full.collect() if r.id in wave_ids)
@@ -290,7 +290,6 @@ def test_retroactive_losers_equal_full_minus_old(spark, idx_path):
     """retroactive == (losers(old ∪ new) − losers(old)) ∩ corpus, with
     identical (kept_id, cosine); every kept_id must be a wave doc (a
     newly-lost corpus doc's shadowers are all wave docs by definition)."""
-    from engine.datawork.dedup import clear_cache_slots
     from engine.datawork.embed_incremental import (retroactive_wave_losers,
                                                    write_semantic_index)
     from engine.datawork.similarity import semdedup_losers, train_kmeans
@@ -304,11 +303,11 @@ def test_retroactive_losers_equal_full_minus_old(spark, idx_path):
     got = _semantic_wave(retroactive_wave_losers(wave, idx_path,
                                                  threshold=THRESH))
 
-    clear_cache_slots()
+    # the full recomputes read no slot (explicit centroids; see
+    # _semantic_full_losers)
     full = {r.id: (r.cell, r.kept_id, r.cosine)
             for r in semdedup_losers(emb, threshold=THRESH,
                                      centroids=cent).collect()}
-    clear_cache_slots()
     old = {r.id for r in semdedup_losers(corpus, threshold=THRESH,
                                          centroids=cent).collect()}
     exp = sorted((i, c, k, cs) for i, (c, k, cs) in full.items()
@@ -316,49 +315,3 @@ def test_retroactive_losers_equal_full_minus_old(spark, idx_path):
     assert got == exp
     assert len(got) > 0  # the planted structure must produce revocations
     assert all(k in wave_ids for _, _, k, _ in got)
-
-
-def test_dot_pair_udf_bitwise_equals_expression(spark):
-    """The Arrow dot kernel must reproduce the interpreted
-    aggregate(zip_with(a, b, x*y), 0.0, acc+x) fold EXACTLY — same IEEE
-    order, same null algebra — across random float32/float64 pairs, tiny
-    magnitudes, zero vectors (exact 0.0), NULL sides, unequal lengths and
-    empty arrays. (Known, documented divergence NOT tested here: NaN
-    input ELEMENTS — no declared surface stores them.)"""
-    import numpy as np
-
-    from engine.datawork.similarity import dot_pair_udf
-
-    rs = np.random.RandomState(321)
-    rows = []
-    for i in range(400):
-        a = rs.standard_normal(DIM)
-        b = rs.standard_normal(DIM)
-        if i % 7 == 0:
-            a = a.astype(np.float32).astype(np.float64)
-        if i % 11 == 0:
-            b = b * 1e-12
-        rows.append((i, [float(x) for x in a], [float(x) for x in b]))
-    rows += [
-        (1000, [0.0] * DIM, [1.0] * DIM),   # exact 0.0 fold
-        (1001, None, [1.0] * DIM),          # NULL side
-        (1002, [1.0] * DIM, None),
-        (1003, [1.0] * 10, [1.0] * DIM),    # unequal lengths -> NULL
-        (1004, [], []),                     # empty fold -> 0.0
-        (1005, [1.0, 2.0], [3.0, 4.0]),     # small non-DIM but equal length
-    ]
-    df = spark.createDataFrame(
-        rows, "vec_id: long, a: array<double>, b: array<double>")
-    expr = F.aggregate(
-        F.zip_with(F.col("a").cast("array<double>"),
-                   F.col("b").cast("array<double>"), lambda x, y: x * y),
-        F.lit(0.0), lambda acc, x: acc + x)
-    both = df.select(
-        "vec_id", expr.alias("e"),
-        dot_pair_udf()(F.col("a"), F.col("b")).alias("u"))
-    bad = both.filter(~(F.col("e").eqNullSafe(F.col("u")))).collect()
-    assert bad == [], bad[:5]
-    z = {r.vec_id: r.u for r in both.collect()}
-    assert z[1000] == 0.0 and z[1004] == 0.0
-    assert z[1001] is None and z[1002] is None and z[1003] is None
-    assert z[1005] == 11.0

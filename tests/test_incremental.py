@@ -31,8 +31,9 @@ def _split(docs, lo, hi):
 
 
 def _full_pairs_touching(docs, wave_ids, threshold=0.5, max_bucket=100):
-    from engine.datawork.dedup import clear_cache_slots, minhash_verified_pairs
-    clear_cache_slots()
+    from engine.datawork import slots
+    from engine.datawork.dedup import minhash_verified_pairs
+    slots.clear()
     full = minhash_verified_pairs(docs, threshold=threshold,
                                   max_bucket=max_bucket)
     rows = sorted((r.id_a, r.id_b, r.est_jaccard) for r in full.collect()
@@ -295,8 +296,8 @@ def test_stream_dedup_ingest_partitions_full_pair_set(spark, idx_path,
     from engine.datawork.incremental import (incremental_verified_pairs,
                                              stream_dedup_ingest,
                                              write_minhash_index)
-    from engine.datawork.dedup import (clear_cache_slots,
-                                       minhash_verified_pairs)
+    from engine.datawork import slots
+    from engine.datawork.dedup import minhash_verified_pairs
     from engine.spark.streaming import stage_ordered_batches
 
     docs = _mk_docs(spark, n=120, seed=83)
@@ -319,7 +320,7 @@ def test_stream_dedup_ingest_partitions_full_pair_set(spark, idx_path,
 
     got = sorted((r.id_a, r.id_b, r.est_jaccard)
                  for r in spark.read.parquet(pairs_path).collect())
-    clear_cache_slots()
+    slots.clear()
     exp = sorted((r.id_a, r.id_b, r.est_jaccard)
                  for r in minhash_verified_pairs(
                      docs, threshold=0.5, max_bucket=100_000).collect())
@@ -333,3 +334,67 @@ def test_stream_dedup_ingest_partitions_full_pair_set(spark, idx_path,
     probe = spark.createDataFrame([(99_999, "nothing like the corpus x")],
                                   "doc_id: long, text: string")
     incremental_verified_pairs(probe, idx_path).count()  # must not raise
+
+
+def test_probe_after_append_sees_the_appended_wave(spark, idx_path):
+    """Resubmitting the identical probe after append_to_index in the same
+    session must answer over the grown index: equal to a cold recompute,
+    not to the pre-append answer. The probe's slots key on the index's
+    file list as well as the plan, and Spark canonicalizes a parquet scan
+    by its root path only."""
+    from engine.datawork import slots
+    from engine.datawork.incremental import (append_to_index,
+                                             incremental_verified_pairs,
+                                             write_minhash_index)
+    docs = _mk_docs(spark, n=80, seed=59)
+    corpus, probe = _split(docs, 0, 8), _split(docs, 8, 10)
+    # one appended word per probe doc: near-duplicates under fresh ids
+    wave = probe.select((F.col("doc_id") + 100_000).alias("doc_id"),
+                        F.concat(F.col("text"), F.lit(" zz")).alias("text"))
+
+    def answer():
+        return [tuple(r) for r in incremental_verified_pairs(probe, idx_path)
+                .orderBy("id_a", "id_b").collect()]
+
+    write_minhash_index(corpus, idx_path)
+    first = answer()
+    append_to_index(wave, idx_path)
+    second = answer()
+    slots.clear(spark)
+    cold = answer()
+    assert second == cold
+    assert second != first
+    assert any(b >= 100_000 for _, b, _, _ in second)
+
+
+def test_stream_ingest_releases_evicted_slot_blocks(spark, tmp_path):
+    """Every micro-batch refills the probe's slots; the evicted results
+    (persisted tables and localCheckpoint blocks) must be released, so the
+    number of persisted RDDs does not grow with the number of batches."""
+    from engine.datawork import slots
+    from engine.datawork.incremental import (stream_dedup_ingest,
+                                             write_minhash_index)
+    from engine.spark.streaming import stage_ordered_batches
+
+    docs = _mk_docs(spark, n=48, seed=67)
+
+    def ingest(n_batches: int, root) -> int:
+        idx = str(root / "idx")
+        write_minhash_index(
+            spark.createDataFrame([], "doc_id: long, text: string"), idx)
+        stage_ordered_batches(
+            [docs.filter(F.col("doc_id") % n_batches == w)
+             for w in range(n_batches)], str(root / "stage"))
+        stream = (spark.readStream.schema(docs.schema)
+                  .option("pathGlobFilter", "*.parquet")
+                  .option("maxFilesPerTrigger", "1")
+                  .parquet(str(root / "stage")))
+        stream_dedup_ingest(stream, idx, str(root / "pairs"),
+                            str(root / "ckpt"), threshold=0.5,
+                            max_bucket=100_000).awaitTermination()
+        return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+    slots.clear(spark)
+    after_3 = ingest(3, tmp_path / "three")
+    after_6 = ingest(6, tmp_path / "six")
+    assert after_6 == after_3

@@ -141,13 +141,16 @@ def test_compact_parquet_preserves_content_and_partitions(spark, tmp_path):
                pathlib.Path(out).iterdir())
 
 
-def test_atomic_rewrite_crash_recovery(tmp_path, spark):
+def test_atomic_rewrite_crash_recovery(tmp_path, spark, monkeypatch):
     """A crash between atomic_rewrite's two renames leaves the data in
     .prerewrite-* with nothing published; recover_rewrite restores it,
-    and the next atomic_rewrite call self-recovers too (ADVICE r6 #1)."""
+    and the next atomic_rewrite call self-recovers too (ADVICE r6 #1).
+    compact_parquet swaps through the same protocol, so a compaction
+    killed in its swap window is recoverable the same way."""
     import shutil
 
-    from engine.spark.sinks import atomic_rewrite, recover_rewrite
+    from engine.spark.sinks import (atomic_rewrite, compact_parquet,
+                                    recover_rewrite)
 
     root = tmp_path / "idx"
     spark.range(10).write.parquet(str(root))
@@ -165,4 +168,22 @@ def test_atomic_rewrite_crash_recovery(tmp_path, spark):
         lambda tmp: spark.range(10).coalesce(1)
         .write.mode("overwrite").parquet(tmp))
     assert out["files_after"] >= 1
+    assert spark.read.parquet(str(root)).count() == 10
+
+    # a compaction killed after moving the live dir aside, before
+    # publishing its replacement (KeyboardInterrupt stands in for the
+    # kill: it bypasses the swap's except-Exception rollback)
+    real_move = shutil.move
+
+    def killed_at_publish(src, dst):
+        if ".rewrite-" in str(src):
+            raise KeyboardInterrupt
+        return real_move(src, dst)
+
+    monkeypatch.setattr(shutil, "move", killed_at_publish)
+    with pytest.raises(KeyboardInterrupt):
+        compact_parquet(spark, str(root), target_bytes=10**9)
+    monkeypatch.setattr(shutil, "move", real_move)
+    assert not root.exists()
+    assert recover_rewrite(str(root)) is True
     assert spark.read.parquet(str(root)).count() == 10

@@ -260,9 +260,9 @@ def main() -> int:
                     "max_cluster": stats["max_cluster"],
                     "rounds": clusters_mod.LAST_ITERATIONS}
         timed("embed_clusters", run_clusters)
-        from engine.datawork import dedup as dedup_mod
+        from engine.datawork import dedup as dedup_mod, slots
         out["rebalance_triggers"] = dedup_mod.REBALANCE_TRIGGERS
-        out["evicted_slots"] = dedup_mod.report_cache_health(spark)
+        out["evicted_slots"] = slots.report(spark)
         if args.json:
             print(json.dumps(out))
         return 0
@@ -334,9 +334,9 @@ def main() -> int:
         timed("full_recompute_corpus88_plus_wave1pct", lambda: {
             "pairs": minhash_verified_pairs(
                 docs.filter(did < w1), threshold=thr).count()})
-        from engine.datawork import dedup as dedup_mod
+        from engine.datawork import dedup as dedup_mod, slots
         out["rebalance_triggers"] = dedup_mod.REBALANCE_TRIGGERS
-        out["evicted_slots"] = dedup_mod.report_cache_health(spark)
+        out["evicted_slots"] = slots.report(spark)
         if args.json:
             print(json.dumps(out))
         return 0
@@ -400,9 +400,9 @@ def main() -> int:
     # proactive sizing must have made the reactive backstop a no-op — if
     # this fires, the scan came in under-split and part of the chain ran
     # on idle cores (the silent 16× round-4 failure mode)
-    from engine.datawork import dedup as dedup_mod
+    from engine.datawork import dedup as dedup_mod, slots
     out["rebalance_triggers"] = dedup_mod.REBALANCE_TRIGGERS
-    out["evicted_slots"] = dedup_mod.report_cache_health(spark)
+    out["evicted_slots"] = slots.report(spark)
     assert dedup_mod.REBALANCE_TRIGGERS == 0, (
         f"reactive rebalance fired {dedup_mod.REBALANCE_TRIGGERS}× despite "
         f"proactive split sizing")

@@ -1,23 +1,13 @@
-"""Persisted LSH ANN index with wave probes — similarity's analogue of
-the dedup family's incremental index (engine/datawork/incremental.py).
-
-A production embedding corpus is hashed and laid out ONCE; query waves
-(new documents looking for near neighbors, retrieval probes, dedup
-lookups) then touch only the bucket slices they hash into, never the
-full corpus. Same lineage as the extraction pipeline's
-output-authoritative resume state (reference: batch_pdf_processor.py's
-completed-stem skip) — persisted derived state stands in for recompute.
-
-Index layout under ``<path>/``:
+"""Persisted sign-LSH ANN index with wave probes — similarity's analogue
+of the dedup family's incremental index. Layout and stats partials follow
+the shared contract in ``bucket_index.py``. Tables under ``<path>/``:
 
 * ``vectors/`` — (id, v, bucket): the corpus vectors keyed by their
   sign-LSH bucket (``similarity.bucket_expr`` over the frozen
-  deterministic planes), written range-partitioned + sorted by bucket so
-  a probe's ``bucket IN (...)`` filter prunes parquet row groups via
-  min/max statistics instead of scanning the corpus.
-* ``stats/``   — (bucket, cnt) ADDITIVE partials (appends write partial
-  rows, readers SUM) — occupancy observability for the skew question
-  "did a bucket degenerate?" without touching ``vectors/``.
+  deterministic planes), sorted by bucket so a probe's ``bucket IN
+  (...)`` filter prunes row groups instead of scanning the corpus.
+* ``stats/``   — (bucket, cnt) partials: occupancy observability for the
+  skew question "did a bucket degenerate?" without touching ``vectors/``.
 
 Scale contract:
 
@@ -28,26 +18,20 @@ Scale contract:
   to the bucket-pruned corpus scan, so the corpus is never shuffled;
   only the candidate set (bucket-collision pairs) flows into the
   per-query top-k window.
-* ``append_to_ann_index``: folding a new wave in costs O(wave) — bucket
-  the wave, append its (sorted-within-file) vectors and stats partials.
 """
 
 from __future__ import annotations
 
-import os
 from typing import List, Optional, Sequence
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
+from . import bucket_index
+from .bucket_index import STATS
 from .similarity import (bucket_expr, cosine_topk, lsh_planes, norm,
-                         probe_buckets)
+                         pair_cosine, probe_buckets)
 
 VECTORS = "vectors"
-STATS = "stats"
-
-
-def _sub(path: str, name: str) -> str:
-    return os.path.join(path, name)
 
 
 def _bucketed(emb: DataFrame, id_col: str, vec_col: str,
@@ -61,28 +45,19 @@ def write_ann_index(emb: DataFrame, path: str, id_col: str = "vec_id",
                     vec_col: str = "embedding",
                     planes: Optional[List[List[float]]] = None) -> None:
     """Build the persisted index from scratch (mode=overwrite)."""
-    spark = emb.sparkSession
-    planes = planes or lsh_planes()
-    b = _bucketed(emb, id_col, vec_col, planes)
-    (b.repartitionByRange("bucket").sortWithinPartitions("bucket")
-      .write.mode("overwrite").parquet(_sub(path, VECTORS)))
-    (spark.read.parquet(_sub(path, VECTORS))
-        .groupBy("bucket").agg(F.count("*").alias("cnt"))
-        .write.mode("overwrite").parquet(_sub(path, STATS)))
+    bucket_index.write_keyed(
+        _bucketed(emb, id_col, vec_col, planes or lsh_planes()), path,
+        VECTORS, STATS, ["bucket"], "overwrite")
 
 
 def append_to_ann_index(new_emb: DataFrame, path: str,
                         id_col: str = "vec_id", vec_col: str = "embedding",
                         planes: Optional[List[List[float]]] = None) -> None:
     """Fold a wave in: O(wave) — each appended file is sorted within
-    itself, so row-group pruning keeps working per file; stats rows are
-    appended as partials (readers SUM), never merged in place."""
-    planes = planes or lsh_planes()
-    b = _bucketed(new_emb, id_col, vec_col, planes)
-    (b.repartitionByRange("bucket").sortWithinPartitions("bucket")
-      .write.mode("append").parquet(_sub(path, VECTORS)))
-    (b.groupBy("bucket").agg(F.count("*").alias("cnt"))
-      .write.mode("append").parquet(_sub(path, STATS)))
+    itself, so row-group pruning keeps working per file."""
+    bucket_index.write_keyed(
+        _bucketed(new_emb, id_col, vec_col, planes or lsh_planes()), path,
+        VECTORS, STATS, ["bucket"], "append")
 
 
 def compact_ann_index(spark: SparkSession, path: str,
@@ -90,26 +65,15 @@ def compact_ann_index(spark: SparkSession, path: str,
     """Maintenance after K appended waves (VERDICT r5 #5): restores the
     single global bucket-sorted ``vectors/`` layout (per-wave appends
     keep pruning only per-file) and folds ``stats/`` partials to one row
-    per bucket. Atomic per table; results identical before/after."""
-    from engine.spark.sinks import atomic_rewrite, compact_sorted_parquet
-
-    out = {}
-    out[VECTORS] = compact_sorted_parquet(
-        spark, _sub(path, VECTORS), ["bucket"], target_bytes)
-    folded = (spark.read.parquet(_sub(path, STATS))
-              .groupBy("bucket").agg(F.sum("cnt").cast("bigint").alias("cnt")))
-    out[STATS] = atomic_rewrite(
-        _sub(path, STATS),
-        lambda tmp: (folded.repartitionByRange(1, "bucket")
-                     .sortWithinPartitions("bucket")
-                     .write.mode("overwrite").parquet(tmp)))
-    return out
+    per bucket (see ``bucket_index.compact``)."""
+    return bucket_index.compact(spark, path, {VECTORS: ["bucket"]}, STATS,
+                                ["bucket"], target_bytes)
 
 
 def index_occupancy(spark: SparkSession, path: str) -> DataFrame:
     """(bucket, cnt) with partials summed — the skew census."""
-    return (spark.read.parquet(_sub(path, STATS))
-            .groupBy("bucket").agg(F.sum("cnt").cast("bigint").alias("cnt")))
+    return bucket_index.occupancy(bucket_index.read(spark, path, STATS),
+                                  ["bucket"])
 
 
 def probe_index(spark: SparkSession, path: str, query: Sequence[float],
@@ -122,7 +86,7 @@ def probe_index(spark: SparkSession, path: str, query: Sequence[float],
     and nothing shuffles: pushed-down IN filter, local top-k merge."""
     planes = planes or lsh_planes()
     probes = probe_buckets(query, planes, probe_bits)
-    cand = (spark.read.parquet(_sub(path, VECTORS))
+    cand = (bucket_index.read(spark, path, VECTORS)
             .filter(F.col("bucket").isin(probes)))
     return cosine_topk(cand, query, k, id_col="id", vec_col="v")
 
@@ -164,20 +128,16 @@ def probe_index_batch(spark: SparkSession, path: str, queries: DataFrame,
         lambda q: q.persist())
     # census the PERSISTED probe side (ADVICE r6: counting the raw query
     # lineage evaluated it twice — once for the census, once in the join)
-    bcast_ok = qb.count() <= max_broadcast_queries
-    hint = F.broadcast if bcast_ok else (lambda df: df)
-    idx = (spark.read.parquet(_sub(path, VECTORS))
+    hint = bucket_index.broadcast_hint(qb.count(), max_broadcast_queries)
+    idx = (bucket_index.read(spark, path, VECTORS)
            .withColumn("nrm", norm(F.col("v"))))
     j = idx.join(hint(qb),
                  (F.col("bucket") == F.col("qbucket"))
                  & (F.col("id") != F.col("qid")))
-    dotprod = F.aggregate(
-        F.zip_with(F.col("v").cast("array<double>"),
-                   F.col("qv").cast("array<double>"), lambda x, y: x * y),
-        F.lit(0.0), lambda acc, x: acc + x)
     scored = j.select(
         "qid", "id",
-        F.round(dotprod / (F.col("nrm") * F.col("qnrm")), 6).alias("score"))
+        pair_cosine(F.col("v"), F.col("qv"), F.col("nrm"),
+                    F.col("qnrm")).alias("score"))
     rk = F.row_number().over(
         Window.partitionBy("qid").orderBy(F.col("score").desc(), "id"))
     return (scored.withColumn("rank", rk.cast("int"))

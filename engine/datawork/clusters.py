@@ -159,6 +159,8 @@ def duplicate_clusters(pairs: DataFrame, max_iterations: int = 15,
                                                      F.col("label")))
                                   .alias("label")))
             new_labels = materialize(new_labels)
+            if i:  # round i-1's checkpoint is unreferenced now
+                slots.release(labels)
             changed = new_labels.filter(
                 F.col("label") != F.col("old_label")).count()
             labels = new_labels.select("id", "label")

@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from . import slots
+from .bucket_index import banded_candidates
 from .textstats import fingerprint
 
 MINHASH_K = 64      # signature length (production-scale; 8 was demo-sized)
@@ -294,24 +295,6 @@ def _minhash_bucket_slot(df: DataFrame, id_col: str, text_col: str, n: int,
         slots.persist)
 
 
-def _candidates_from_buckets(buckets: DataFrame,
-                             max_bucket: int) -> DataFrame:
-    """Distinct (id_a, id_b) from a (id, band, bucket) table: hot-bucket
-    guard (broadcast anti-join — the hot list is ≤ a handful of
-    degenerate keys) then the equi self-join. THE one candidate join,
-    shared by the raw and verified operators."""
-    hot = (buckets.groupBy("band", "bucket")
-           .agg(F.count("*").alias("bsz"))
-           .filter(F.col("bsz") > max_bucket).select("band", "bucket"))
-    buckets = buckets.join(F.broadcast(hot), ["band", "bucket"], "left_anti")
-    a, b_ = buckets.alias("a"), buckets.alias("b")
-    return (a.join(b_, (F.col("a.band") == F.col("b.band"))
-                   & (F.col("a.bucket") == F.col("b.bucket"))
-                   & (F.col("a.id") < F.col("b.id")))
-            .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-            .distinct())
-
-
 def minhash_lsh_candidates(df: DataFrame, id_col: str = "doc_id",
                            text_col: str = "text", n: int = 3,
                            k: int = MINHASH_K,
@@ -342,7 +325,7 @@ def minhash_lsh_candidates(df: DataFrame, id_col: str = "doc_id",
     # because the per-group pair arrays are materialized whole while the
     # sort-merge join streams the identical Σ C(bucket,2) rows with
     # bounded memory. Streaming wins at the scale that matters.
-    return _candidates_from_buckets(
+    return banded_candidates(
         _minhash_bucket_slot(df, id_col, text_col, n, k, bands), max_bucket)
 
 
@@ -371,7 +354,7 @@ def minhash_verified_pairs(df: DataFrame, id_col: str = "doc_id",
     read it, so a combined run with minhash_lsh_candidates/guard_report
     shares every intermediate (same slots, same plans)."""
     sig = _minhash_sig_slot(df, id_col, text_col, n, k)
-    cand = _candidates_from_buckets(
+    cand = banded_candidates(
         _minhash_bucket_slot(df, id_col, text_col, n, k, bands), max_bucket)
     sa = sig.select(F.col("id").alias("id_a"),
                     *[F.col(f"mh{i}").alias(f"a{i}") for i in range(k)])

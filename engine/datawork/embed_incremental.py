@@ -1,34 +1,22 @@
-"""Incremental embedding near-dup against a persisted banded-LSH index —
-the embedding-space symmetry of engine/datawork/incremental.py (minhash):
-a corpus's vectors are signed and bucketed ONCE; each new ingest wave is
-near-dup-checked against the index + itself without rescanning corpus
-vectors (reference lineage: the output-authoritative resume scans of
-batch_pdf_processor.py:2562-2625 — persisted derived state stands in for
-recompute).
+"""Incremental embedding near-dup against persisted banded-LSH and semantic
+indexes: the embedding-space twin of ``incremental.py`` (MinHash). Layout,
+stats partials, the combined-occupancy guards and the wave probe follow
+the shared contract in ``bucket_index.py``.
 
-Index layout under ``<path>/``:
+Banded-LSH index under ``<path>/``:
 
-* ``vectors/`` — (id, v, nrm, sig): the only vector-derived state, written
-  range-partitioned + sorted by id so the candidate-id semi-join on the
-  verify side prunes parquet row groups.
-* ``buckets/`` — (id, band, bucket): ``bands`` rows per vector, sorted by
-  (band, bucket) for the wave's touched-bucket probe.
-* ``stats/``   — (band, bucket, cnt) ADDITIVE partials (readers SUM).
+* ``vectors/`` — (id, v, nrm, sig), sorted by id (the candidate-id
+  semi-join of the verify side prunes row groups).
+* ``buckets/`` — (id, band, bucket), ``bands`` rows per vector, with
+  their ``stats/`` partials.
 * ``layout/``  — one row (bands, rows): the signature layout is FROZEN at
   write time; append/probe read it back, so a caller cannot silently
   probe a 24×4 index with a 16×8 wave.
 
-Exactness contract (same shape as the minhash module): the pair set of
-``incremental_embedding_pairs(wave, path)`` equals
-``similarity.cosine_pairs_above(old ∪ new, bucketed=True)`` — with the
-same pinned layout and the hot-bucket guard computed on COMBINED
-occupancy — restricted to pairs with ≥1 wave member. The equivalence
+The pair set of ``incremental_embedding_pairs(wave, path)`` equals
+``similarity.cosine_pairs_above(old ∪ new, bucketed=True)`` with the same
+pinned layout, restricted to pairs with ≥1 wave member; the equivalence
 tests and the DuckDB oracle pin it.
-
-Scale contract: per-wave cost ∝ wave. The corpus is touched only through
-wave-driven semi-joins (touched buckets, candidate ids); wave-side
-broadcasts are censused and fall back to shuffle joins past
-``max_broadcast_rows`` (the r6 guard pattern, see incremental.py).
 """
 
 from __future__ import annotations
@@ -37,17 +25,14 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from . import bucket_index, slots
+from .bucket_index import BAND_KEYS, BUCKETS, STATS
 from .incremental import MAX_BROADCAST_ROWS
-from .similarity import LSH_BANDS, LSH_ROWS, norm
+from .similarity import (LSH_BANDS, LSH_ROWS, _explode_bands,
+                         first_shadowers, norm, pair_cosine)
 
 VECTORS = "vectors"
-BUCKETS = "buckets"
-STATS = "stats"
 LAYOUT = "layout"
-
-
-def _sub(path: str, name: str) -> str:
-    return os.path.join(path, name)
 
 
 def _base(emb: DataFrame, id_col: str, vec_col: str, bands: int,
@@ -62,37 +47,8 @@ def _base(emb: DataFrame, id_col: str, vec_col: str, bands: int,
         banded_sig_udf(bands, rows)(F.col(vec_col)).alias("sig"))
 
 
-def _explode(base: DataFrame, bands: int, rows: int) -> DataFrame:
-    return (base.select("id", F.explode(F.array(*[
-        F.struct(F.lit(b).alias("band"),
-                 F.substring("sig", b * rows + 1, rows).alias("bucket"))
-        for b in range(bands)])).alias("bb"))
-        .select("id", "bb.band", "bb.bucket"))
-
-
-def _write_sorted_once(df: DataFrame, writes: list) -> None:
-    """Materialize an expensive projection ONCE (persist + count), then
-    run each (project, sort_cols, path, mode) range-write off the cache.
-
-    Why: ``repartitionByRange`` runs a boundary-sampling job over its
-    child and then the real exchange — an unpersisted child pays the
-    projection 2-3×. For the 256-plane signature this was measured at
-    88k vectors: plain write 136 s, naive range write 375 s; cached
-    range write pays the projection once. The cache is released before
-    returning."""
-    df = df.persist()
-    df.count()  # materializes every column into the cache exactly once
-    try:
-        for project, sort_cols, path, mode in writes:
-            (project(df).repartitionByRange(*sort_cols)
-             .sortWithinPartitions(*sort_cols)
-             .write.mode(mode).parquet(path))
-    finally:
-        df.unpersist()
-
-
 def read_layout(spark: SparkSession, path: str) -> tuple[int, int]:
-    row = spark.read.parquet(_sub(path, LAYOUT)).collect()[0]
+    row = bucket_index.read(spark, path, LAYOUT).collect()[0]
     return int(row["bands"]), int(row["rows"])
 
 
@@ -105,19 +61,15 @@ def write_embedding_index(emb: DataFrame, path: str,
     read back to derive buckets/stats — the sign computation (bands·rows
     plane dots per vector) runs exactly once."""
     spark = emb.sparkSession
-    base = _base(emb, id_col, vec_col, bands, rows)
-    _write_sorted_once(base, [
-        (lambda d: d, ["id"], _sub(path, VECTORS), "overwrite")])
-    base_r = spark.read.parquet(_sub(path, VECTORS))
-    buckets = _explode(base_r, bands, rows)
-    (buckets.repartitionByRange("band", "bucket")
-            .sortWithinPartitions("band", "bucket")
-            .write.mode("overwrite").parquet(_sub(path, BUCKETS)))
-    (spark.read.parquet(_sub(path, BUCKETS))
-        .groupBy("band", "bucket").agg(F.count("*").alias("cnt"))
-        .write.mode("overwrite").parquet(_sub(path, STATS)))
+    with bucket_index.cached(_base(emb, id_col, vec_col, bands,
+                                   rows)) as base:
+        bucket_index.write_sorted(base, path, VECTORS, ["id"], "overwrite")
+    bucket_index.write_keyed(
+        _explode_bands(bucket_index.read(spark, path, VECTORS), bands, rows),
+        path, BUCKETS, STATS, BAND_KEYS, "overwrite")
     (spark.createDataFrame([(bands, rows)], "`bands` int, `rows` int")
-        .coalesce(1).write.mode("overwrite").parquet(_sub(path, LAYOUT)))
+        .coalesce(1).write.mode("overwrite")
+        .parquet(os.path.join(path, LAYOUT)))
 
 
 def append_to_embedding_index(new_emb: DataFrame, path: str,
@@ -125,42 +77,21 @@ def append_to_embedding_index(new_emb: DataFrame, path: str,
                               vec_col: str = "embedding") -> None:
     """Fold an ingested wave in (cost ∝ wave); layout comes from the
     index — a mismatched wave cannot be appended."""
-    spark = new_emb.sparkSession
-    bands, rows = read_layout(spark, path)
-    base = _base(new_emb, id_col, vec_col, bands, rows).persist()
-    try:
-        base.count()  # one signature pass for all three appends
-        (base.repartitionByRange("id").sortWithinPartitions("id")
-             .write.mode("append").parquet(_sub(path, VECTORS)))
-        buckets = _explode(base, bands, rows)
-        (buckets.repartitionByRange("band", "bucket")
-                .sortWithinPartitions("band", "bucket")
-                .write.mode("append").parquet(_sub(path, BUCKETS)))
-        (buckets.groupBy("band", "bucket").agg(F.count("*").alias("cnt"))
-            .write.mode("append").parquet(_sub(path, STATS)))
-    finally:
-        base.unpersist()
+    bands, rows = read_layout(new_emb.sparkSession, path)
+    # one signature pass for all three appends
+    with bucket_index.cached(_base(new_emb, id_col, vec_col, bands,
+                                   rows)) as base:
+        bucket_index.write_sorted(base, path, VECTORS, ["id"], "append")
+        bucket_index.write_keyed(_explode_bands(base, bands, rows), path,
+                                 BUCKETS, STATS, BAND_KEYS, "append")
 
 
 def compact_embedding_index(spark: SparkSession, path: str,
                             target_bytes: int = 128 * 1024 * 1024) -> dict:
     """Same maintenance contract as incremental.compact_index."""
-    from engine.spark.sinks import atomic_rewrite, compact_sorted_parquet
-
-    out = {}
-    out[VECTORS] = compact_sorted_parquet(
-        spark, _sub(path, VECTORS), ["id"], target_bytes)
-    out[BUCKETS] = compact_sorted_parquet(
-        spark, _sub(path, BUCKETS), ["band", "bucket"], target_bytes)
-    folded = (spark.read.parquet(_sub(path, STATS))
-              .groupBy("band", "bucket")
-              .agg(F.sum("cnt").cast("bigint").alias("cnt")))
-    out[STATS] = atomic_rewrite(
-        _sub(path, STATS),
-        lambda tmp: (folded.repartitionByRange(1, "band", "bucket")
-                     .sortWithinPartitions("band", "bucket")
-                     .write.mode("overwrite").parquet(tmp)))
-    return out
+    return bucket_index.compact(spark, path,
+                                {VECTORS: ["id"], BUCKETS: BAND_KEYS},
+                                STATS, BAND_KEYS, target_bytes)
 
 
 # ---------------------------------------------------------------------------
@@ -190,6 +121,16 @@ def _semantic_assign(emb: DataFrame, cent: DataFrame, id_col: str,
     return _assign_cells(base, cent, keep_score=True)
 
 
+def _write_members(asg: DataFrame, path: str, mode: str) -> None:
+    """members/ (+ cstats/) and vectors/ from one cached assignment."""
+    with bucket_index.cached(asg) as a:
+        bucket_index.write_keyed(
+            a.select("id", "cell", F.col("ccos").alias("pcos")), path,
+            MEMBERS, CSTATS, ["cell"], mode)
+        bucket_index.write_sorted(a.select("id", "v", "nrm"), path, VECTORS,
+                                  ["id"], mode)
+
+
 def write_semantic_index(emb: DataFrame, path: str, centroids: DataFrame,
                          id_col: str = "vec_id",
                          vec_col: str = "embedding",
@@ -205,22 +146,16 @@ def write_semantic_index(emb: DataFrame, path: str, centroids: DataFrame,
     natural byproduct of deduping a corpus before shipping it."""
     spark = emb.sparkSession
     (centroids.select("cell", "cv").coalesce(1)
-              .write.mode("overwrite").parquet(_sub(path, CELLS)))
-    cent = spark.read.parquet(_sub(path, CELLS))
-    asg = _semantic_assign(emb, cent, id_col, vec_col)
-    _write_sorted_once(asg, [
-        (lambda d: d.select("id", "cell", F.col("ccos").alias("pcos")),
-         ["cell"], _sub(path, MEMBERS), "overwrite"),
-        (lambda d: d.select("id", "v", "nrm"),
-         ["id"], _sub(path, VECTORS), "overwrite")])
-    (spark.read.parquet(_sub(path, MEMBERS))
-        .groupBy("cell").agg(F.count("*").alias("cnt"))
-        .write.mode("overwrite").parquet(_sub(path, CSTATS)))
+              .write.mode("overwrite").parquet(os.path.join(path, CELLS)))
+    cent = bucket_index.read(spark, path, CELLS)
+    _write_members(_semantic_assign(emb, cent, id_col, vec_col), path,
+                   "overwrite")
     if losers_threshold is not None:
         from .similarity import semdedup_losers
         (semdedup_losers(emb, threshold=losers_threshold, centroids=cent,
                          id_col=id_col, vec_col=vec_col)
-         .select("id").write.mode("overwrite").parquet(_sub(path, LOSERS)))
+         .select("id").write.mode("overwrite")
+         .parquet(os.path.join(path, LOSERS)))
 
 
 def append_to_semantic_index(new_emb: DataFrame, path: str,
@@ -228,21 +163,36 @@ def append_to_semantic_index(new_emb: DataFrame, path: str,
                              vec_col: str = "embedding") -> None:
     """Fold a processed wave in (cost ∝ wave); assignment uses the FROZEN
     codebook — appending never re-trains."""
+    cent = bucket_index.read(new_emb.sparkSession, path, CELLS)
+    _write_members(_semantic_assign(new_emb, cent, id_col, vec_col), path,
+                   "append")
+
+
+def _semantic_probe(new_emb: DataFrame, index_path: str, id_col: str,
+                    vec_col: str, max_broadcast_rows: int) -> tuple:
+    """(wave rows, corpus members of the touched cells, hint) — the wave
+    assigned against the frozen codebook, censused once."""
     spark = new_emb.sparkSession
-    cent = spark.read.parquet(_sub(path, CELLS))
-    asg = _semantic_assign(new_emb, cent, id_col, vec_col).persist()
-    try:
-        asg.count()  # one assignment pass for all three appends
-        (asg.select("id", "cell", F.col("ccos").alias("pcos"))
-            .repartitionByRange("cell").sortWithinPartitions("cell")
-            .write.mode("append").parquet(_sub(path, MEMBERS)))
-        (asg.select("id", "v", "nrm")
-            .repartitionByRange("id").sortWithinPartitions("id")
-            .write.mode("append").parquet(_sub(path, VECTORS)))
-        (asg.groupBy("cell").agg(F.count("*").alias("cnt"))
-            .write.mode("append").parquet(_sub(path, CSTATS)))
-    finally:
-        asg.unpersist()
+    cent = bucket_index.read(spark, index_path, CELLS)
+    wave = slots.memo("sem_wave",
+                      _semantic_assign(new_emb, cent, id_col, vec_col),
+                      slots.truncate)
+    hint = bucket_index.broadcast_hint(wave.count(), max_broadcast_rows)
+    cmem = bucket_index.touched(spark, index_path, MEMBERS, wave, ["cell"],
+                                hint)
+    return wave, cmem, hint
+
+
+def _with_vectors(cmem: DataFrame, index_path: str, hint) -> DataFrame:
+    """Corpus members joined to their vectors, fetched by id (id-sorted
+    layout → row-group pruning; volume ∝ touched-cell population)."""
+    cvec = (bucket_index.read(cmem.sparkSession, index_path, VECTORS)
+            .join(hint(cmem.select("id")), "id", "left_semi"))
+    return cmem.join(cvec, "id").select("id", "cell", "pcos", "v", "nrm")
+
+
+def _ranked(wave: DataFrame) -> DataFrame:
+    return wave.select("id", "cell", F.col("ccos").alias("pcos"), "v", "nrm")
 
 
 def semdedup_wave_losers(new_emb: DataFrame, index_path: str,
@@ -254,78 +204,23 @@ def semdedup_wave_losers(new_emb: DataFrame, index_path: str,
                          ) -> DataFrame:
     """SemDeDup pruning decision for THE WAVE against a frozen-codebook
     index: a wave doc is dropped iff some same-cell mate (indexed corpus
-    OR wave) precedes it in the GLOBAL keep order (centroid-cosine ASC,
-    id ASC — the r5 lesson: per-cell ranks over-delete) with pairwise
-    cosine ≥ threshold. Returns (id, cell, kept_id, cosine), kept_id =
-    the loser's first shadower in keep order — EXACTLY
-    ``semdedup_losers(old ∪ new, centroids=<frozen>, nprobe=1)``
-    restricted to wave ids (equivalence test + oracle pin it). Corpus
-    docs are never re-dropped here: canon already shipped; the wave is
-    what's being filtered.
+    OR wave) precedes it in the GLOBAL keep order with pairwise cosine ≥
+    threshold (``similarity.first_shadowers``). Returns (id, cell,
+    kept_id, cosine) — EXACTLY ``semdedup_losers(old ∪ new,
+    centroids=<frozen>, nprobe=1)`` restricted to wave ids (equivalence
+    test + oracle pin it). Corpus docs are never re-dropped here: canon
+    already shipped; the wave is what's being filtered.
 
     ``max_cluster`` uses COMBINED occupancy (persisted cstats + wave
-    counts), mirroring the LSH hot-bucket guard. Wave-side broadcasts are
-    censused with the same fallback as incremental_embedding_pairs."""
-    from pyspark.sql import Window
-    spark = new_emb.sparkSession
-    from . import slots
-    cent = spark.read.parquet(_sub(index_path, CELLS))
-    wave = slots.memo("sem_wave",
-                      _semantic_assign(new_emb, cent, id_col, vec_col),
-                      slots.truncate)
-
-    n_wave = wave.count()
-    hint = F.broadcast if n_wave <= max_broadcast_rows else (lambda df: df)
-
-    touched = wave.select("cell").distinct()
-    cmem = (spark.read.parquet(_sub(index_path, MEMBERS))
-            .join(hint(touched), "cell", "left_semi"))
-
-    if max_cluster is not None:
-        old_cnt = (spark.read.parquet(_sub(index_path, CSTATS))
-                   .join(hint(touched), "cell", "left_semi")
-                   .groupBy("cell").agg(F.sum("cnt").alias("old_cnt")))
-        new_cnt = wave.groupBy("cell").agg(F.count("*").alias("new_cnt"))
-        big = (new_cnt.join(old_cnt, "cell", "left_outer")
-               .withColumn("cnt", F.coalesce("old_cnt", F.lit(0))
-                           + F.col("new_cnt"))
-               .filter(F.col("cnt") > max_cluster).select("cell"))
-        wave_k = wave.join(hint(big), "cell", "left_anti")
-        cmem = cmem.join(hint(big), "cell", "left_anti")
-    else:
-        wave_k = wave
-
-    # corpus shadow set: members of touched cells, vectors fetched by id
-    # (id-sorted layout → row-group pruning; volume ∝ touched-cell pop)
-    cvec = (spark.read.parquet(_sub(index_path, VECTORS))
-            .join(hint(cmem.select("id")), "id", "left_semi"))
-    corpus_side = (cmem.join(cvec, "id")
-                   .select("id", "cell", "pcos", "v", "nrm"))
-    wave_side = wave_k.select("id", "cell", F.col("ccos").alias("pcos"),
-                              "v", "nrm")
-    shadowers = (wave_side.unionByName(corpus_side)).alias("a")
-    losers = wave_side.alias("b")
-    precedes = ((F.col("a.pcos") < F.col("b.pcos"))
-                | ((F.col("a.pcos") == F.col("b.pcos"))
-                   & (F.col("a.id") < F.col("b.id"))))
-    pair_cos = F.round(
-        F.aggregate(
-            F.zip_with(F.col("a.v").cast("array<double>"),
-                       F.col("b.v").cast("array<double>"),
-                       lambda x, y: x * y),
-            F.lit(0.0), lambda acc, x: acc + x)
-        / (F.col("a.nrm") * F.col("b.nrm")), 6)
-    pairs = (shadowers.join(losers,
-                            (F.col("a.cell") == F.col("b.cell")) & precedes)
-             .select(F.col("b.id").alias("id"),
-                     F.col("b.cell").alias("cell"),
-                     F.col("a.id").alias("kept_id"),
-                     F.col("a.pcos").alias("kp"),
-                     pair_cos.alias("cosine"))
-             .filter(F.col("cosine") >= threshold))
-    first = Window.partitionBy("id").orderBy("kp", "kept_id", "cell")
-    return (pairs.withColumn("_p", F.row_number().over(first))
-            .filter(F.col("_p") == 1).drop("_p", "kp"))
+    counts), the same guard as the LSH hot buckets."""
+    wave, cmem, hint = _semantic_probe(new_emb, index_path, id_col, vec_col,
+                                       max_broadcast_rows)
+    wave_k, cmem = bucket_index.drop_hot(wave, cmem, index_path, CSTATS,
+                                         ["cell"], max_cluster, hint)
+    wave_side = _ranked(wave_k)
+    return first_shadowers(
+        wave_side.unionByName(_with_vectors(cmem, index_path, hint)),
+        wave_side, threshold)
 
 
 def retroactive_wave_losers(new_emb: DataFrame, index_path: str,
@@ -349,49 +244,12 @@ def retroactive_wave_losers(new_emb: DataFrame, index_path: str,
     identical (kept_id, cosine) — equivalence test + oracle pin it.
     Requires the index to have been built with ``losers_threshold`` equal
     to this ``threshold``."""
-    from pyspark.sql import Window
-    spark = new_emb.sparkSession
-    from . import slots
-    cent = spark.read.parquet(_sub(index_path, CELLS))
-    wave = slots.memo("sem_wave",
-                      _semantic_assign(new_emb, cent, id_col, vec_col),
-                      slots.truncate)
-    n_wave = wave.count()
-    hint = F.broadcast if n_wave <= max_broadcast_rows else (lambda df: df)
-
-    touched = wave.select("cell").distinct()
-    cmem = (spark.read.parquet(_sub(index_path, MEMBERS))
-            .join(hint(touched), "cell", "left_semi")
-            .join(spark.read.parquet(_sub(index_path, LOSERS)),
-                  "id", "left_anti"))
-    cvec = (spark.read.parquet(_sub(index_path, VECTORS))
-            .join(hint(cmem.select("id")), "id", "left_semi"))
-    corpus_side = (cmem.join(cvec, "id")
-                   .select("id", "cell", "pcos", "v", "nrm"))
-    shadowers = wave.select("id", "cell", F.col("ccos").alias("pcos"),
-                            "v", "nrm").alias("a")
-    losers = corpus_side.alias("b")
-    precedes = ((F.col("a.pcos") < F.col("b.pcos"))
-                | ((F.col("a.pcos") == F.col("b.pcos"))
-                   & (F.col("a.id") < F.col("b.id"))))
-    pair_cos = F.round(
-        F.aggregate(
-            F.zip_with(F.col("a.v").cast("array<double>"),
-                       F.col("b.v").cast("array<double>"),
-                       lambda x, y: x * y),
-            F.lit(0.0), lambda acc, x: acc + x)
-        / (F.col("a.nrm") * F.col("b.nrm")), 6)
-    pairs = (shadowers.join(losers,
-                            (F.col("a.cell") == F.col("b.cell")) & precedes)
-             .select(F.col("b.id").alias("id"),
-                     F.col("b.cell").alias("cell"),
-                     F.col("a.id").alias("kept_id"),
-                     F.col("a.pcos").alias("kp"),
-                     pair_cos.alias("cosine"))
-             .filter(F.col("cosine") >= threshold))
-    first = Window.partitionBy("id").orderBy("kp", "kept_id", "cell")
-    return (pairs.withColumn("_p", F.row_number().over(first))
-            .filter(F.col("_p") == 1).drop("_p", "kp"))
+    wave, cmem, hint = _semantic_probe(new_emb, index_path, id_col, vec_col,
+                                       max_broadcast_rows)
+    cmem = cmem.join(bucket_index.read(new_emb.sparkSession, index_path,
+                                       LOSERS), "id", "left_anti")
+    return first_shadowers(_ranked(wave),
+                           _with_vectors(cmem, index_path, hint), threshold)
 
 
 def incremental_embedding_pairs(new_emb: DataFrame, index_path: str,
@@ -411,89 +269,20 @@ def incremental_embedding_pairs(new_emb: DataFrame, index_path: str,
     persisted + wave population exceeds it is dropped from candidate
     generation on BOTH sides — exactly what the full recompute's guard
     would do, so exactness survives the cap."""
-    from . import slots
-    spark = new_emb.sparkSession
-    bands, rows = read_layout(spark, index_path)
+    bands, rows = read_layout(new_emb.sparkSession, index_path)
     wave = slots.memo("embincr_wave",
                       _base(new_emb, id_col, vec_col, bands, rows),
                       slots.truncate)
-    # pre-partitioned by (band, bucket) so the occupancy aggregate and both
-    # candidate joins reuse the cache's partitioning (no extra Exchange);
-    # slot registration bounds the session's cached blocks (ADVICE r6).
-    # Persisted lazily: the census count below materializes it.
-    b_new = slots.memo("embincr_b_new",
-                       _explode(wave, bands, rows)
-                       .repartition("band", "bucket"),
-                       lambda b: b.persist())
 
-    # one census count materializes b_new AND its cached parent wave;
-    # _explode emits exactly ``bands`` rows/vector, so the count IS
-    # n_wave·bands — the broadcast-size variable
-    bcast_ok = b_new.count() <= max_broadcast_rows
-    hint = F.broadcast if bcast_ok else (lambda df: df)
+    def side(vecs: DataFrame, s: str) -> DataFrame:
+        return vecs.select(F.col("id").alias(f"id_{s}"),
+                           F.col("v").alias(f"v{s}"),
+                           F.col("nrm").alias(f"n{s}"),
+                           F.col("_new").alias(f"{s}_new"))
 
-    touched = b_new.select("band", "bucket").distinct()
-    corpus_buckets = (spark.read.parquet(_sub(index_path, BUCKETS))
-                      .join(hint(touched), ["band", "bucket"], "left_semi"))
-
-    if max_bucket is not None:
-        corpus_stats = (spark.read.parquet(_sub(index_path, STATS))
-                        .join(hint(touched), ["band", "bucket"], "left_semi")
-                        .groupBy("band", "bucket")
-                        .agg(F.sum("cnt").alias("old_cnt")))
-        new_cnt = (b_new.groupBy("band", "bucket")
-                   .agg(F.count("*").alias("new_cnt")))
-        hot = (new_cnt.join(corpus_stats, ["band", "bucket"], "left_outer")
-               .withColumn("cnt", F.coalesce("old_cnt", F.lit(0))
-                           + F.col("new_cnt"))
-               .filter(F.col("cnt") > max_bucket).select("band", "bucket"))
-        b_new = b_new.join(hint(hot), ["band", "bucket"], "left_anti")
-        corpus_buckets = corpus_buckets.join(hint(hot), ["band", "bucket"],
-                                             "left_anti")
-
-    nn = (b_new.alias("a")
-          .join(b_new.alias("b"),
-                (F.col("a.band") == F.col("b.band"))
-                & (F.col("a.bucket") == F.col("b.bucket"))
-                & (F.col("a.id") < F.col("b.id")))
-          .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b")))
-    no = (b_new.alias("w")
-          .join(corpus_buckets.alias("c"),
-                (F.col("w.band") == F.col("c.band"))
-                & (F.col("w.bucket") == F.col("c.bucket")))
-          .select(F.least(F.col("w.id"), F.col("c.id")).alias("id_a"),
-                  F.greatest(F.col("w.id"), F.col("c.id")).alias("id_b")))
-    cand = nn.unionByName(no).distinct()
-    # cand feeds five subtrees of the verify plan (both verify joins plus
-    # both arms of the id semi-join) — persist the wave-proportional set so
-    # AQE materializes the nn/no/distinct lineage once, not per consumer
-    # (the incremental.py probe lesson; same bounded-slot contract)
-    cand = slots.memo("embincr_cand", cand, slots.truncate)
-
-    # exact-cosine verify: corpus vectors read ONLY for candidate ids
-    # (id-sorted layout → row-group pruning); wave membership rides the
-    # union as a column, so origin tagging costs zero extra joins
-    cand_ids = (cand.select(F.col("id_a").alias("id"))
-                .unionByName(cand.select(F.col("id_b").alias("id")))
-                .distinct())
-    corpus_vecs = (spark.read.parquet(_sub(index_path, VECTORS))
-                   .join(hint(cand_ids), "id", "left_semi"))
-    vecs = (wave.select("id", "v", "nrm").withColumn("_new", F.lit(True))
-            .unionByName(corpus_vecs.select("id", "v", "nrm")
-                         .withColumn("_new", F.lit(False))))
-    va = vecs.select(F.col("id").alias("id_a"), F.col("v").alias("va"),
-                     F.col("nrm").alias("na"), F.col("_new").alias("a_new"))
-    vb = vecs.select(F.col("id").alias("id_b"), F.col("v").alias("vb"),
-                     F.col("nrm").alias("nb"), F.col("_new").alias("b_new"))
-    dotprod = F.aggregate(
-        F.zip_with(F.col("va").cast("array<double>"),
-                   F.col("vb").cast("array<double>"), lambda x, y: x * y),
-        F.lit(0.0), lambda acc, x: acc + x)
-    return (cand.join(va, "id_a").join(vb, "id_b")
-            .select("id_a", "id_b",
-                    F.round(dotprod / (F.col("na") * F.col("nb")), 6)
-                     .alias("cosine"),
-                    F.when(F.col("a_new") & F.col("b_new"),
-                           F.lit("new_new")).otherwise(F.lit("new_old"))
-                     .alias("origin"))
-            .filter(F.col("cosine") >= threshold))
+    return bucket_index.wave_probe(
+        _explode_bands(wave, bands, rows), wave.select("id", "v", "nrm"),
+        index_path, VECTORS, "embincr", side,
+        ("cosine", pair_cosine(F.col("va"), F.col("vb"), F.col("na"),
+                               F.col("nb"))),
+        threshold, max_bucket, max_broadcast_rows)

@@ -1,42 +1,17 @@
 """Incremental MinHash dedup against a persisted corpus index.
 
-A production pipeline ingests waves: the corpus already on disk has been
-signed and bucketed once; a NEW wave must be deduplicated against it (and
-against itself) WITHOUT re-reading the corpus text. This is the corpus-scale
-analogue of the extraction pipeline's output-authoritative resume scans
-(reference: batch_pdf_processor.py:2562-2625 skips completed stems; here the
-persisted signature/bucket index is the "completed" state and each wave
-joins against it instead of recomputing).
+The corpus is signed and bucketed once; each ingest wave is deduplicated
+against the index and itself without re-reading corpus text. Layout,
+stats partials, the combined-occupancy guard and the wave probe follow
+the shared contract in ``bucket_index.py``. Family-specific tables under
+``<path>/``:
 
-Index layout under ``<path>/``:
-
-* ``sigs/``    — (id, mh0..mh{k-1}), one row per corpus doc. The only text
-  -derived state; a wave never touches corpus text again.
-* ``buckets/`` — (id, band, bucket), ``bands`` rows per doc, written
-  range-partitioned + sorted by (band, bucket) so a wave's probe (a join
-  against the wave's touched buckets) prunes parquet row groups by min/max
-  statistics instead of scanning the full index.
-* ``stats/``   — (band, bucket, cnt) ADDITIVE partial counts (appends write
-  partial rows; readers aggregate). Only the wave's touched buckets are
-  ever aggregated, after a broadcast semi-join.
-
-Scale contract (the point of the design): per-wave cost is proportional to
-the WAVE, not the corpus —
-
-* wave text is shingled/signed once (the only CPU-heavy stage);
-* the corpus side is touched exclusively through broadcast-driven scans:
-  touched-bucket semi-join on ``buckets/`` (row-group-pruned), touched
-  stats aggregation, and a broadcast semi-join on ``sigs/`` restricted to
-  candidate ids — ZERO corpus-sized shuffles anywhere in the plan (plan
-  test: tests/test_incremental.py pins no Exchange on the corpus scans);
-* the hot-bucket guard is computed on COMBINED occupancy (persisted corpus
-  counts + wave counts), so the kept/dropped bucket set — and therefore
-  the pair set — is exactly the one a full recompute over old ∪ new would
-  produce (the equivalence tests/oracle pin this).
-
-Precondition (same as the rest of the dedup family): ids are unique per
-row AND waves are disjoint from the indexed corpus — re-ingesting an
-already-indexed id would double its signature rows.
+* ``sigs/``    — (id, mh0..mh{k-1}), one row per corpus doc: the only
+  text-derived state. Written unsorted (a range write would re-run the
+  k-min aggregation for its boundary sample); ``compact_index`` sorts it
+  by id.
+* ``buckets/`` — (id, band, bucket), ``bands`` rows per doc, sorted by
+  (band, bucket); ``stats/`` holds their (band, bucket, cnt) partials.
 """
 
 from __future__ import annotations
@@ -45,17 +20,12 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from . import slots
+from . import bucket_index, slots
+from .bucket_index import BAND_KEYS, BUCKETS, STATS
 from .dedup import (MINHASH_BANDS, MINHASH_K, _band_explode,
                     minhash_signatures)
 
 SIGS = "sigs"
-BUCKETS = "buckets"
-STATS = "stats"
-
-
-def _sub(path: str, name: str) -> str:
-    return os.path.join(path, name)
 
 
 def write_minhash_index(docs: DataFrame, path: str, id_col: str = "doc_id",
@@ -68,21 +38,11 @@ def write_minhash_index(docs: DataFrame, path: str, id_col: str = "doc_id",
     and stats — the k-min aggregation (the expensive part) runs exactly
     once, and the derived tables share the on-disk row values rather than
     a recomputed lineage."""
-    spark = docs.sparkSession
     sigs = minhash_signatures(docs, id_col, text_col, n, k)
-    sigs.write.mode("overwrite").parquet(_sub(path, SIGS))
-    sigs_r = spark.read.parquet(_sub(path, SIGS))
-    buckets = _band_explode(sigs_r, k, bands)
-    # range-partition + sort by (band, bucket): parquet min/max row-group
-    # statistics then prune a wave's touched-bucket probe to the few row
-    # groups that can hold those keys (the persisted analogue of the
-    # in-memory co-partitioned bucket cache, dedup._minhash_bucket_slot)
-    (buckets.repartitionByRange("band", "bucket")
-            .sortWithinPartitions("band", "bucket")
-            .write.mode("overwrite").parquet(_sub(path, BUCKETS)))
-    (spark.read.parquet(_sub(path, BUCKETS))
-        .groupBy("band", "bucket").agg(F.count("*").alias("cnt"))
-        .write.mode("overwrite").parquet(_sub(path, STATS)))
+    sigs.write.mode("overwrite").parquet(os.path.join(path, SIGS))
+    sigs_r = bucket_index.read(docs.sparkSession, path, SIGS)
+    bucket_index.write_keyed(_band_explode(sigs_r, k, bands), path, BUCKETS,
+                             STATS, BAND_KEYS, "overwrite")
 
 
 def append_to_index(new_docs: DataFrame, path: str, id_col: str = "doc_id",
@@ -92,28 +52,18 @@ def append_to_index(new_docs: DataFrame, path: str, id_col: str = "doc_id",
                     sigs_df: DataFrame | None = None) -> None:
     """Fold an ingested wave into the index (cost ∝ wave size).
 
-    Stats rows are appended as PARTIALS for the wave's buckets — merging
-    counters in place would rewrite a corpus-sized table per wave; readers
-    SUM over the few partial rows a touched bucket has instead.
-
     ``sigs_df`` lets a caller that already signed the wave (the streamed
     probe-then-fold loop: ``incremental_verified_pairs`` materializes the
     same signatures) hand them in, skipping a second shingle+k-min pass
     over the wave text (VERDICT r6 #7). Must be exactly
     ``minhash_signatures(new_docs, ...)`` rows — the signature is a
     deterministic function of the text, so a persisted copy qualifies."""
-    spark = new_docs.sparkSession
     sigs = sigs_df if sigs_df is not None \
         else minhash_signatures(new_docs, id_col, text_col, n, k)
-    sigs.write.mode("append").parquet(_sub(path, SIGS))
-    # re-read ONLY this wave's ids to derive its buckets: cheaper to recompute
-    # from the wave's in-memory lineage (1 row/doc) than to rescan the table
-    buckets = _band_explode(sigs, k, bands)
-    (buckets.repartitionByRange("band", "bucket")
-            .sortWithinPartitions("band", "bucket")
-            .write.mode("append").parquet(_sub(path, BUCKETS)))
-    (buckets.groupBy("band", "bucket").agg(F.count("*").alias("cnt"))
-        .write.mode("append").parquet(_sub(path, STATS)))
+    sigs.write.mode("append").parquet(os.path.join(path, SIGS))
+    # buckets from the wave's in-memory lineage (1 row/doc), not a rescan
+    bucket_index.write_keyed(_band_explode(sigs, k, bands), path, BUCKETS,
+                             STATS, BAND_KEYS, "append")
 
 
 def stream_dedup_ingest(stream_docs: DataFrame, index_path: str,
@@ -143,7 +93,7 @@ def stream_dedup_ingest(stream_docs: DataFrame, index_path: str,
     at-least-once under a retry between the two steps — on a transactional
     table format (Iceberg) both steps join one snapshot commit; on plain
     parquet, re-running a failed batch can double a wave's signature rows
-    (the same honesty note as the module precondition).
+    (the index precondition in bucket_index.py).
 
     Returns the started ``StreamingQuery``."""
     def _batch(batch_df, batch_id: int) -> None:
@@ -173,36 +123,14 @@ def stream_dedup_ingest(stream_docs: DataFrame, index_path: str,
 def compact_index(spark: SparkSession, path: str,
                   target_bytes: int = 128 * 1024 * 1024) -> dict:
     """Maintenance pass after K appended waves (VERDICT r5 #5): each
-    ``append_to_index`` adds its own (internally sorted) files, so
-    ``buckets/`` row-group pruning degrades to per-appended-file and
-    ``stats/`` accumulates partial rows forever. This rewrites, atomically
-    per table (engine/spark/sinks.atomic_rewrite — the parquet analogue
-    of Iceberg's rewrite_data_files):
-
-    * ``buckets/`` → one global (band,bucket) range-sorted layout;
-    * ``sigs/``    → range-sorted by id (the candidate-id semi-join now
-      prunes row groups too);
-    * ``stats/``   → partial rows FOLDED to one row per (band,bucket).
-
-    Query results are identical before/after (compaction test pins it);
-    only file counts, layout, and stats row counts change. Returns
-    per-table {files,bytes}×{before,after}."""
-    from engine.spark.sinks import atomic_rewrite, compact_sorted_parquet
-
-    out = {}
-    out[BUCKETS] = compact_sorted_parquet(
-        spark, _sub(path, BUCKETS), ["band", "bucket"], target_bytes)
-    out[SIGS] = compact_sorted_parquet(
-        spark, _sub(path, SIGS), ["id"], target_bytes)
-    folded = (spark.read.parquet(_sub(path, STATS))
-              .groupBy("band", "bucket")
-              .agg(F.sum("cnt").cast("bigint").alias("cnt")))
-    out[STATS] = atomic_rewrite(
-        _sub(path, STATS),
-        lambda tmp: (folded.repartitionByRange(1, "band", "bucket")
-                     .sortWithinPartitions("band", "bucket")
-                     .write.mode("overwrite").parquet(tmp)))
-    return out
+    ``append_to_index`` adds its own sorted files and stats partials.
+    ``buckets/`` goes back to one (band, bucket) range-sorted layout,
+    ``sigs/`` is range-sorted by id (the candidate-id semi-join then
+    prunes row groups too), ``stats/`` is folded (see
+    ``bucket_index.compact``)."""
+    return bucket_index.compact(spark, path,
+                                {BUCKETS: BAND_KEYS, SIGS: ["id"]},
+                                STATS, BAND_KEYS, target_bytes)
 
 
 #: Above this many wave-derived rows (wave docs × bands), the wave-side
@@ -240,125 +168,30 @@ def incremental_verified_pairs(new_docs: DataFrame, index_path: str,
                                ) -> DataFrame:
     """Verified near-dup pairs TOUCHING the new wave: wave×corpus +
     wave×wave, identical to ``minhash_verified_pairs(old ∪ new)`` filtered
-    to pairs with ≥1 wave member (the exactness contract; see the module
-    docstring for why the combined-occupancy guard makes this hold).
+    to pairs with ≥1 wave member (the exactness contract; the combined-
+    occupancy guard makes it hold). Returns (id_a, id_b, est_jaccard,
+    origin) with id_a < id_b and origin ∈ {'new_new', 'new_old'}.
 
-    Returns (id_a, id_b, est_jaccard, origin) with id_a < id_b and origin
-    ∈ {'new_new', 'new_old'} (both-ids-in-wave vs one side indexed).
-
-    Wave-side broadcast guard (VERDICT r5 #3): every broadcast below is
-    wave-proportional (touched buckets, hot set, candidate ids), so the
-    wave is censused ONCE up front; past ``max_broadcast_rows`` the same
-    joins run without the hint — identical pair set (the equivalence
-    tests run both paths), bounded memory, and AQE may still broadcast
-    at runtime if the actual relation turns out small."""
-    spark = new_docs.sparkSession
-    # ``presigned`` = the wave's ALREADY-persisted signature table (must be
-    # minhash_signatures(new_docs, ...) rows) — the probe-then-fold loop
-    # signs the wave once and shares it with append_to_index (r6 #7)
+    ``presigned`` is the wave's already-persisted signature table (exactly
+    ``minhash_signatures(new_docs, ...)`` rows): the probe-then-fold loop
+    signs the wave once and shares it with ``append_to_index``. Past
+    ``max_broadcast_rows`` wave bucket rows the same joins run without
+    the broadcast hint (identical pairs; the equivalence tests run both
+    paths)."""
     sig_new = presigned if presigned is not None else slots.memo(
         "incr_sig_new", minhash_signatures(new_docs, id_col, text_col, n, k),
         slots.truncate)
-    # repartitioned by (band, bucket) BEFORE the persist (the
-    # _minhash_bucket_slot trick): touched/distinct, the wave occupancy
-    # aggregate, and both candidate joins all key on (band, bucket), so
-    # they read the cache's outputPartitioning instead of each adding an
-    # Exchange of the wave buckets. Persisted lazily: the census count
-    # below materializes it.
-    b_new = slots.memo("incr_b_new",
-                       _band_explode(sig_new, k, bands)
-                       .repartition("band", "bucket"),
-                       lambda b: b.persist())
 
-    # census: ONE count of the persisted bucket table — _band_explode emits
-    # exactly ``bands`` rows/doc, so b_new.count() IS the broadcast-size
-    # variable (n_wave·bands), and the count materializes b_new AND its
-    # cached parent sig_new in the same pass (the broadcast decision must
-    # come from the wave's REAL size, not a hope)
-    bcast_ok = b_new.count() <= max_broadcast_rows
-    hint = F.broadcast if bcast_ok else (lambda df: df)
+    def side(rows: DataFrame, s: str) -> DataFrame:
+        return rows.select(F.col("id").alias(f"id_{s}"),
+                           F.col("_new").alias(f"{s}_new"),
+                           *[F.col(f"mh{i}").alias(f"{s}{i}")
+                             for i in range(k)])
 
-    # the wave's probe set — ≤ bands rows/doc, broadcast while small
-    touched = b_new.select("band", "bucket").distinct()
-
-    # corpus side: scans filtered by wave-driven semi-joins (no corpus
-    # shuffle on the broadcast path; on the fallback path the corpus side
-    # shuffles by (band,bucket) — still never by corpus text/signature)
-    corpus_buckets = (spark.read.parquet(_sub(index_path, BUCKETS))
-                      .join(hint(touched), ["band", "bucket"],
-                            "left_semi"))
-    corpus_stats = (spark.read.parquet(_sub(index_path, STATS))
-                    .join(hint(touched), ["band", "bucket"],
-                          "left_semi")
-                    .groupBy("band", "bucket")
-                    .agg(F.sum("cnt").alias("old_cnt")))
-
-    # combined occupancy = persisted corpus count + wave count — the same
-    # totals a full recompute over old ∪ new counts, restricted to touched
-    # buckets (untouched buckets cannot produce wave pairs)
-    new_cnt = b_new.groupBy("band", "bucket").agg(F.count("*").alias("new_cnt"))
-    hot = (new_cnt.join(corpus_stats, ["band", "bucket"], "left_outer")
-           .withColumn("cnt", F.coalesce("old_cnt", F.lit(0)) + F.col("new_cnt"))
-           .filter(F.col("cnt") > max_bucket).select("band", "bucket"))
-
-    b_new_cold = b_new.join(hint(hot), ["band", "bucket"], "left_anti")
-    corpus_cold = corpus_buckets.join(hint(hot), ["band", "bucket"],
-                                      "left_anti")
-
-    nn = (b_new_cold.alias("a")
-          .join(b_new_cold.alias("b"),
-                (F.col("a.band") == F.col("b.band"))
-                & (F.col("a.bucket") == F.col("b.bucket"))
-                & (F.col("a.id") < F.col("b.id")))
-          .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b")))
-    no = (b_new_cold.alias("w")
-          .join(corpus_cold.alias("c"),
-                (F.col("w.band") == F.col("c.band"))
-                & (F.col("w.bucket") == F.col("c.bucket")))
-          .select(F.least(F.col("w.id"), F.col("c.id")).alias("id_a"),
-                  F.greatest(F.col("w.id"), F.col("c.id")).alias("id_b")))
-    cand = nn.unionByName(no).distinct()
-    # the candidate set feeds FIVE subtrees of the verify plan (both verify
-    # joins, plus both arms of the candidate-id semi-join) — left lazy,
-    # Catalyst replans and AQE re-materializes the whole nn/no/distinct
-    # lineage once per consumer (measured at sf0.1: a 228-job probe, ~60
-    # redundant shuffle stages and seconds of driver planning). cand is
-    # wave-proportional by construction, so the lineage-truncating slot is
-    # bounded by the same contract as the broadcasts above — and the
-    # truncation keeps the verify join's analyzed tree small (see
-    # slots.truncate). Its key scans the index, so a probe after an
-    # append to the index misses and recomputes.
-    cand = slots.memo("incr_cand", cand, slots.truncate)
-
-    # verify via the signature estimate — corpus signatures are read ONLY
-    # for candidate ids (semi-join; candidate volume ∝ wave, so the same
-    # census decision governs the hint)
-    cand_ids = (cand.select(F.col("id_a").alias("id"))
-                .unionByName(cand.select(F.col("id_b").alias("id")))
-                .distinct())
-    sig_old = (spark.read.parquet(_sub(index_path, SIGS))
-               .join(hint(cand_ids), "id", "left_semi"))
-    # wave membership rides the union as a column — origin tagging then
-    # costs ZERO extra joins (r5 verdict nit: the old spelling broadcast
-    # the wave-id table twice just to mark each side)
-    sig_all = (sig_new.withColumn("_new", F.lit(True))
-               .unionByName(sig_old.withColumn("_new", F.lit(False))))
-    sa = sig_all.select(F.col("id").alias("id_a"),
-                        F.col("_new").alias("a_new"),
-                        *[F.col(f"mh{i}").alias(f"a{i}") for i in range(k)])
-    sb = sig_all.select(F.col("id").alias("id_b"),
-                        F.col("_new").alias("b_new"),
-                        *[F.col(f"mh{i}").alias(f"b{i}") for i in range(k)])
+    # verify via the signature estimate: k equality tests per candidate
     matches = sum(F.when(F.col(f"a{i}") == F.col(f"b{i}"), 1).otherwise(0)
                   for i in range(k))
-    # origin is a function of wave membership, not of which candidate
-    # branch produced the pair (both-in-wave pairs can also surface via
-    # the wave×corpus join when ids overlap buckets — distinct() merged them)
-    return (cand.join(sa, "id_a").join(sb, "id_b")
-            .select("id_a", "id_b",
-                    F.round(matches / F.lit(float(k)), 6)
-                     .alias("est_jaccard"),
-                    F.when(F.col("a_new") & F.col("b_new"),
-                           F.lit("new_new")).otherwise(F.lit("new_old"))
-                     .alias("origin"))
-            .filter(F.col("est_jaccard") >= threshold))
+    return bucket_index.wave_probe(
+        _band_explode(sig_new, k, bands), sig_new, index_path, SIGS, "incr",
+        side, ("est_jaccard", F.round(matches / F.lit(float(k)), 6)),
+        threshold, max_bucket, max_broadcast_rows)

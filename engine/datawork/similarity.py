@@ -29,6 +29,8 @@ from typing import List, Sequence
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from .bucket_index import banded_candidates
+
 LSH_PLANES_SEED = 42
 LSH_N_PLANES = 8
 EMBED_DIM = 64
@@ -51,19 +53,27 @@ def _lit_array(values: Sequence[float]) -> Column:
     return F.array(*[F.lit(float(v)) for v in values])
 
 
-def dot(vec: Column, const: Sequence[float]) -> Column:
-    """Σ vec[i]·const[i], left-to-right in double precision (matches the
+def _fold_dot(u: Column, v: Column) -> Column:
+    """Σ u[i]·v[i], left-to-right in double precision (matches the
     oracle's list_sum(list_transform(...)) evaluation order)."""
-    return F.aggregate(
-        F.zip_with(vec.cast("array<double>"), _lit_array(const), lambda x, y: x * y),
-        F.lit(0.0), lambda acc, x: acc + x)
+    return F.aggregate(F.zip_with(u, v, lambda x, y: x * y),
+                       F.lit(0.0), lambda acc, x: acc + x)
+
+
+def dot(vec: Column, const: Sequence[float]) -> Column:
+    return _fold_dot(vec.cast("array<double>"), _lit_array(const))
 
 
 def norm(vec: Column) -> Column:
-    return F.sqrt(F.aggregate(
-        F.zip_with(vec.cast("array<double>"), vec.cast("array<double>"),
-                   lambda x, y: x * y),
-        F.lit(0.0), lambda acc, x: acc + x))
+    return F.sqrt(_fold_dot(vec.cast("array<double>"),
+                            vec.cast("array<double>")))
+
+
+def pair_cosine(u: Column, v: Column, nu: Column, nv: Column) -> Column:
+    """round(u·v / (nu·nv), 6) for two vector columns and their norms: the
+    one exact-cosine verify (pairs, centroids, query waves)."""
+    return F.round(_fold_dot(u.cast("array<double>"), v.cast("array<double>"))
+                   / (nu * nv), 6)
 
 
 def cosine_to_const(vec: Column, query: Sequence[float]) -> Column:
@@ -163,15 +173,19 @@ def _train_kmeans_loop(base: DataFrame, n_cells: int, iters: int,
             for d in range(dim)]
     mean = F.array(*[F.col(f"s{d}") / (F.col("cnt") * float(KMEANS_SCALE))
                      for d in range(dim)])
-    for _ in range(iters):
+    from . import slots
+    for i in range(iters):
         assigned = _assign_cells(base, cent)
         newc = (assigned.groupBy("cell")
                 .agg(F.count("*").alias("cnt"), *sums)
                 .select("cell", mean.alias("cv")))
-        cent = (cent.alias("o").join(newc.alias("n"), "cell", "left")
-                .select(F.col("cell"),
-                        F.coalesce(F.col("n.cv"), F.col("o.cv")).alias("cv")))
-        cent = cent.localCheckpoint(eager=True)  # flat plan per iteration
+        nxt = (cent.alias("o").join(newc.alias("n"), "cell", "left")
+               .select(F.col("cell"),
+                       F.coalesce(F.col("n.cv"), F.col("o.cv")).alias("cv"))
+               .localCheckpoint(eager=True))  # flat plan per iteration
+        if i:  # round i-1's checkpoint is unreferenced now
+            slots.release(cent)
+        cent = nxt
     return cent
 
 
@@ -187,13 +201,9 @@ def _assign_cells(base: DataFrame, cent: DataFrame,
     per (vector, probed cell) — semdedup's cluster-boundary closure)."""
     from pyspark.sql import Window
     c = cent.select("cell", "cv").withColumn("cnrm", norm(F.col("cv")))
-    dotprod = F.aggregate(
-        F.zip_with(F.col("v").cast("array<double>"),
-                   F.col("cv").cast("array<double>"), lambda x, y: x * y),
-        F.lit(0.0), lambda acc, x: acc + x)
     scored = (base.crossJoin(F.broadcast(c))
-              .withColumn("ccos", F.round(
-                  dotprod / (F.col("nrm") * F.col("cnrm")), 6)))
+              .withColumn("ccos", pair_cosine(F.col("v"), F.col("cv"),
+                                              F.col("nrm"), F.col("cnrm"))))
     w = Window.partitionBy("id").orderBy(F.col("ccos").desc(), F.col("cell"))
     drop = ["rk", "cv", "cnrm"] + ([] if keep_score else ["ccos"])
     return (scored.withColumn("rk", F.row_number().over(w))
@@ -271,22 +281,28 @@ def semdedup_losers(df: DataFrame, threshold: float = 0.95,
     # cells it is the consistent order that makes mutual drops impossible
     pv = Window.partitionBy("id")
     ranked = asg.withColumn("pcos", F.max("ccos").over(pv))
-    a, b = ranked.alias("a"), ranked.alias("b")
+    return first_shadowers(ranked, ranked, threshold)
+
+
+def first_shadowers(shadowers: DataFrame, losers: DataFrame,
+                    threshold: float) -> DataFrame:
+    """The SemDeDup rule over two (id, cell, pcos, v, nrm) frames: every
+    ``losers`` row that a same-cell ``shadowers`` row precedes in the
+    global keep order (pcos ASC, id ASC) at pairwise cosine ≥
+    ``threshold``, as (id, cell, kept_id, cosine) with kept_id its first
+    shadower in that order (ties → smallest cell)."""
+    from pyspark.sql import Window
     precedes = ((F.col("a.pcos") < F.col("b.pcos"))
                 | ((F.col("a.pcos") == F.col("b.pcos"))
                    & (F.col("a.id") < F.col("b.id"))))
-    pair_cos = F.round(
-        F.aggregate(
-            F.zip_with(F.col("a.v").cast("array<double>"),
-                       F.col("b.v").cast("array<double>"),
-                       lambda x, y: x * y),
-            F.lit(0.0), lambda acc, x: acc + x)
-        / (F.col("a.nrm") * F.col("b.nrm")), 6)
-    pairs = (a.join(b, (F.col("a.cell") == F.col("b.cell")) & precedes)
+    pairs = (shadowers.alias("a")
+             .join(losers.alias("b"),
+                   (F.col("a.cell") == F.col("b.cell")) & precedes)
              .select(F.col("b.id").alias("id"), F.col("b.cell").alias("cell"),
                      F.col("a.id").alias("kept_id"),
                      F.col("a.pcos").alias("kp"),
-                     pair_cos.alias("cosine"))
+                     pair_cosine(F.col("a.v"), F.col("b.v"), F.col("a.nrm"),
+                                 F.col("b.nrm")).alias("cosine"))
              .filter(F.col("cosine") >= threshold))
     first = Window.partitionBy("id").orderBy("kp", "kept_id", "cell")
     return (pairs.withColumn("_p", F.row_number().over(first))
@@ -376,7 +392,7 @@ def banded_sig_udf(bands: int = LSH_BANDS, rows: int = LSH_ROWS,
     output, ~100× the throughput.
 
     The Catalyst spelling is n_planes interpreted higher-order
-    ``aggregate(zip_with(...))`` expressions per row (no codegen for
+    ``dot`` folds per row (no codegen for
     lambda functions): measured 1.5 ms/row at 256 planes — the dominant
     cost of every embedding-index build. This kernel vectorizes ACROSS
     rows while looping the dims IN ORDER, so each accumulator update is
@@ -501,26 +517,6 @@ def banded_buckets_shared(df: DataFrame, id_col: str = "vec_id",
                           .select("id", "sig"), bands, rows)
 
 
-def candidate_pairs_from_banded(banded: DataFrame,
-                                max_bucket: int | None = None) -> DataFrame:
-    """Distinct (id_a, id_b) candidates from a (id, band, bucket) table —
-    THE candidate join cosine_pairs_above verifies, exposed as one
-    function so telemetry (tools/recall_report.py) counts exactly the
-    production join instead of maintaining a hand-copied twin that can
-    drift (e.g. if the guard default changes here)."""
-    if max_bucket is not None:
-        hot = (banded.groupBy("band", "bucket")
-               .agg(F.count("*").alias("bsz"))
-               .filter(F.col("bsz") > max_bucket).select("band", "bucket"))
-        banded = banded.join(F.broadcast(hot), ["band", "bucket"], "left_anti")
-    ca, cb = banded.alias("ca"), banded.alias("cb")
-    return (ca.join(cb, (F.col("ca.band") == F.col("cb.band"))
-                    & (F.col("ca.bucket") == F.col("cb.bucket"))
-                    & (F.col("ca.id") < F.col("cb.id")))
-            .select(F.col("ca.id").alias("id_a"), F.col("cb.id").alias("id_b"))
-            .distinct())
-
-
 def cosine_pairs_above(df: DataFrame, threshold: float = 0.95,
                        id_col: str = "vec_id", vec_col: str = "embedding",
                        bucketed: bool = True, bands: int = LSH_BANDS,
@@ -550,15 +546,11 @@ def cosine_pairs_above(df: DataFrame, threshold: float = 0.95,
 
     def verify(pairs_ab):
         # exact-cosine verify, shared by both paths
-        dotprod = F.aggregate(
-            F.zip_with(F.col("a.v").cast("array<double>"),
-                       F.col("b.v").cast("array<double>"), lambda x, y: x * y),
-            F.lit(0.0), lambda acc, x: acc + x)
         return (pairs_ab
                 .select(F.col("a.id").alias("id_a"),
                         F.col("b.id").alias("id_b"),
-                        F.round(dotprod / (F.col("a.nrm") * F.col("b.nrm")),
-                                6).alias("cosine"))
+                        pair_cosine(F.col("a.v"), F.col("b.v"), F.col("a.nrm"),
+                                    F.col("b.nrm")).alias("cosine"))
                 .filter(F.col("cosine") >= threshold))
 
     if not bucketed:
@@ -589,7 +581,7 @@ def cosine_pairs_above(df: DataFrame, threshold: float = 0.95,
         "embed_lsh_base", _lsh_base_plan(df, id_col, vec_col, bands, rows),
         slots.persist)
     banded = _explode_bands(base.select("id", "sig"), bands, rows)
-    cand = candidate_pairs_from_banded(banded, max_bucket)
+    cand = banded_candidates(banded, max_bucket)
     a = base.select(F.col("id"), F.col("v"), F.col("nrm")).alias("a")
     b = base.select(F.col("id"), F.col("v"), F.col("nrm")).alias("b")
     pairs_ab = (cand.join(a, cand.id_a == F.col("a.id"))

@@ -159,13 +159,14 @@ def _input_files(df: DataFrame) -> list:
 
 
 def _evict(slot) -> None:
-    _release(_SLOTS.pop(slot)[2])
+    release(_SLOTS.pop(slot)[2])
 
 
-def _release(df: DataFrame) -> None:
+def release(df: DataFrame) -> None:
     """Free ``df``'s blocks: unpersist a persisted frame; for a truncated
     one, unpersist the checkpointed RDD its plan scans (under any
-    renaming projections)."""
+    renaming projections). Also for the intermediate rounds of an
+    iterative build, once the next round has materialized."""
     try:
         if df.is_cached:
             df.unpersist()

@@ -101,7 +101,10 @@ def stage_ordered_batches(dfs, stage_dir: str) -> None:
     base = _time.time()
     for i, df in enumerate(dfs):
         tmp = tempfile.mkdtemp(prefix="stage_batch_")
-        df.coalesce(1).write.mode("overwrite").parquet(tmp)
+        # maxRecordsPerFile=0 overrides a session cap that would split the
+        # one partition into several files
+        (df.coalesce(1).write.option("maxRecordsPerFile", 0)
+           .mode("overwrite").parquet(tmp))
         [part] = [p for p in os.listdir(tmp) if p.endswith(".parquet")]
         dst = os.path.join(stage_dir, f"batch-{i:04d}.parquet")
         shutil.move(os.path.join(tmp, part), dst)
@@ -128,7 +131,8 @@ def stage_partitioned_batches(df, wave_col, n_waves: int,
     try:
         (df.withColumn("__wave", wave_col.cast("int"))
            .repartition(F.col("__wave"))
-           .write.partitionBy("__wave").mode("overwrite").parquet(tmp))
+           .write.option("maxRecordsPerFile", 0)
+           .partitionBy("__wave").mode("overwrite").parquet(tmp))
         base = _time.time()
         for i in range(n_waves):
             dst = os.path.join(stage_dir, f"batch-{i:04d}.parquet")
@@ -138,7 +142,8 @@ def stage_partitioned_batches(df, wave_col, n_waves: int,
                      if os.path.isdir(wave_dir) else [])
             if parts:
                 # one file per wave: each distinct __wave value owns one
-                # post-repartition partition, hence one written file
+                # post-repartition partition, hence (with no record cap)
+                # one written file
                 [part] = parts
                 shutil.move(os.path.join(wave_dir, part), dst)
             else:  # empty wave — stage an empty file with the full schema

@@ -284,6 +284,41 @@ def test_duplicate_clusters_long_chain_converges_fast(spark):
     assert got == {i: 0 for i in range(61)}
 
 
+@pytest.mark.parametrize("op", ["kmeans", "clusters"])
+def test_iterative_ops_release_per_round_checkpoints(spark, emb, op):
+    """k-means training and duplicate_clusters checkpoint every round; a
+    round's blocks must be released once the next round has materialized,
+    so the persisted-RDD growth of one call does not depend on how many
+    rounds it ran."""
+    from engine.datawork import clusters, slots
+    from engine.datawork.similarity import train_kmeans
+
+    def chain(n):
+        return spark.createDataFrame([(i, i + 1) for i in range(n)],
+                                     "id_a bigint, id_b bigint")
+
+    runs = {"kmeans": [lambda: train_kmeans(emb, iters=2),
+                       lambda: train_kmeans(emb, iters=6)],
+            "clusters": [lambda: clusters.duplicate_clusters(chain(1)),
+                         lambda: clusters.duplicate_clusters(chain(60))]}
+    def persisted():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+    # growth = RDDs the call left persisted: new ids only, so an unrelated
+    # RDD the context cleaner frees meanwhile cannot mask one; results
+    # stay referenced so the cleaner cannot free theirs either
+    growth, rounds, results = [], [], []
+    for run in runs[op]:
+        slots.clear(spark)
+        before = persisted()
+        results.append(run())
+        growth.append(len(persisted() - before))
+        rounds.append(clusters.LAST_ITERATIONS)
+    if op == "clusters":
+        assert rounds[0] == 2 and rounds[1] >= 5
+    assert growth[0] == growth[1]
+
+
 def test_datawork_job_cli(spark, tmp_path):
     """The spark-submit entry point for the corpus suite: op dispatch and
     parquet round-trip (session reused, no CLI subprocess)."""

@@ -111,29 +111,46 @@ def test_combined_occupancy_guard(spark, idx_path):
     assert inc_ok.filter(F.col("est_jaccard") != 1.0).count() == 0
 
 
-def test_no_corpus_shuffle_in_plan(spark, idx_path):
-    """The scale contract: every corpus-index scan reaches its join through
-    a Broadcast exchange — no shuffle Exchange may sit above a scan of the
-    index tables (wave-proportional cost depends on it)."""
+def test_no_corpus_shuffle_in_plan(spark, tmp_path):
+    """The scale contract, for both callers of the shared wave probe:
+    every corpus-index scan reaches its join through a Broadcast exchange
+    — no shuffle Exchange may sit above a scan of the index tables
+    (wave-proportional cost depends on it)."""
+    from engine.datawork.embed_incremental import (
+        incremental_embedding_pairs, write_embedding_index)
     from engine.datawork.incremental import (incremental_verified_pairs,
                                              write_minhash_index)
     docs = _mk_docs(spark, n=60)
-    corpus, wave = _split(docs, 0, 8), _split(docs, 8, 10)
-    write_minhash_index(corpus, idx_path)
-    plan = (incremental_verified_pairs(wave, idx_path)
-            ._jdf.queryExecution().executedPlan().toString())
-    # walk the tree: record, for each parquet scan of the index, whether a
-    # shuffle Exchange appears between it and the root on its branch — the
-    # simple textual proxy: an "Exchange hashpartitioning"/"rangepartitioning"
-    # node must never list an index-scan as its direct child subtree root.
-    lines = plan.splitlines()
-    for i, ln in enumerate(lines):
-        if "Scan parquet" in ln and "minhash_index" in ln:
+    rnd = random.Random(5)
+    emb = spark.createDataFrame(
+        [(i, [rnd.gauss(0, 1) for _ in range(64)]) for i in range(60)],
+        "vec_id: long, embedding: array<double>")
+    cases = [("minhash_index", write_minhash_index, incremental_verified_pairs,
+              _split(docs, 0, 8), _split(docs, 8, 10)),
+             ("embed_index", write_embedding_index,
+              incremental_embedding_pairs, emb.filter("vec_id % 10 < 8"),
+              emb.filter("vec_id % 10 >= 8"))]
+    for name, write, probe, corpus, wave in cases:
+        path = str(tmp_path / name)
+        write(corpus, path)
+        plan = (probe(wave, path)
+                ._jdf.queryExecution().executedPlan().toString())
+        # walk the tree: record, for each parquet scan (the wave is local
+        # rows, so every parquet scan reads the index; the scan line's
+        # location is truncated, so it cannot be matched by path), whether
+        # a shuffle Exchange appears between it and the root on its
+        # branch — the simple textual proxy: an "Exchange hashpartitioning"
+        # /"rangepartitioning" node must never list an index-scan as its
+        # direct child subtree root.
+        lines = plan.splitlines()
+        scans = [i for i, ln in enumerate(lines) if "Scan parquet" in ln]
+        assert scans, f"no {name} scan in plan:\n{plan}"
+        for i in scans:
             # ascend: nearest less-indented ancestor lines must hit a join
             # or broadcast exchange before any shuffle Exchange
             def depth(s):
                 return len(s) - len(s.lstrip(" :+-*"))
-            d = depth(ln)
+            d = depth(lines[i])
             for j in range(i - 1, -1, -1):
                 dj = depth(lines[j])
                 if dj < d:

@@ -316,3 +316,34 @@ def test_stream_stream_join_matches_across_microbatches(spark, tmp_path):
     got = sorted((r["c_id"], r["p_id"])
                  for r in spark.table("ss_join_test_sink").collect())
     assert got == [(1, 4), (1, 5), (2, 3)]
+
+
+def test_staging_keeps_one_file_per_batch_under_a_record_cap(spark, tmp_path):
+    """A session ``maxRecordsPerFile`` cap would split a staged wave into
+    several files; both stagers must still emit one file per batch whose
+    rows are exactly the wave's."""
+    from pyspark.sql import functions as F
+
+    from engine.spark.streaming import (stage_ordered_batches,
+                                        stage_partitioned_batches)
+
+    rows = [(i, f"t{i}") for i in range(12)]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    waves = [sorted(r for r in rows if r[0] % 3 == w) for w in range(3)]
+    key = "spark.sql.files.maxRecordsPerFile"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "1")
+    try:
+        stage_partitioned_batches(df, F.pmod(F.col("doc_id"), F.lit(3)), 3,
+                                  str(tmp_path / "partitioned"))
+        stage_ordered_batches([df.filter(F.col("doc_id") % 3 == w)
+                               for w in range(3)], str(tmp_path / "ordered"))
+    finally:
+        spark.conf.set(key, old)
+    for stage in ("partitioned", "ordered"):
+        files = sorted((tmp_path / stage).iterdir())
+        assert [f.name for f in files] == [f"batch-{i:04d}.parquet"
+                                           for i in range(3)]
+        got = [sorted(tuple(r) for r in spark.read.parquet(str(f)).collect())
+               for f in files]
+        assert got == waves

@@ -57,9 +57,9 @@ def main() -> int:
     # bands knob (recall gains must be reported next to this, VERDICT r2
     # #5). Counted through the SAME function the production path joins
     # with, so the number cannot drift from the real plan.
-    from engine.datawork.similarity import (banded_buckets,
-                                            candidate_pairs_from_banded)
-    emb_candidates = candidate_pairs_from_banded(banded_buckets(emb)).count()
+    from engine.datawork.bucket_index import banded_candidates
+    from engine.datawork.similarity import banded_buckets
+    emb_candidates = banded_candidates(banded_buckets(emb)).count()
     emb_rows = []
     for tau in (0.35, 0.5, 0.8):
         t = {k for k, c in truth.items() if c >= tau}
